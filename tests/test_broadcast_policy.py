@@ -41,7 +41,7 @@ _ALLOWED = {
     "pipeline/company_match.py::match_companies": "dim: company candidate set",
     "pipeline/rank.py::rank_jobs": "dim: company dimension",
     "pipeline/report.py::daily_digest": "dim: company dimension",
-    "pipeline/runner.py::_mor_apply_deltas": "keyset: delta-batch keys / reset keys (delta-sized; factored out of mor_read for bucket-scoped compaction)",
+    "pipeline/store.py::_mor_apply_deltas": "keyset: delta-batch keys / reset keys (delta-sized; factored out of mor_read for bucket-scoped compaction)",
     "queries/curation.py::q113_split_drift": "1-row: per-split stats by lang domain",
     "queries/domain.py::q14_hash_identity": "dim: nation",
     "queries/domain.py::q17_fuzzy_match": "dim: 5-row candidate company dim",
