@@ -258,54 +258,6 @@ def simhash_from_hashes_expr(hs: Column, n_tokens: Column, bits: int = SIMHASH_B
     return F.when(n_tokens > 0, packed)
 
 
-# Arrow/numpy fold escape hatch (VERDICT r11 #9): the interpreted-HOF
-# fold above costs ~0.25 s per sf0.1 corpus pass; a vectorized numpy fold
-# in a pandas UDF is faster PER ROW but pays the Python-worker ramp
-# (~0.4 s/spawn on the bench box) and the JVM→Arrow→JVM transfer of the
-# token-hash arrays — measured BELOW break-even at sf0.1 (r11/r12 A/B in
-# OPTIMIZATION_r12.md), so default OFF. At real corpus scale (worker pool
-# warm, many batches per task) the vectorized path wins; a deployment
-# flips it with JOBSPARK_ARROW_FOLD=1 — results are bit-identical
-# (integer math, same strict-positive rule; pinned by
-# tests/test_banding_property.py::test_arrow_fold_matches_expr_fold).
-ARROW_FOLD_ENV = "JOBSPARK_ARROW_FOLD"
-
-
-def _arrow_simhash_udf(bits: int):
-    import pandas as pd  # noqa: F401 - signature type only
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("bigint")
-    def _fold(hs_series, n_series):
-        import numpy as np
-        import pandas as pd
-
-        shifts = np.arange(bits, dtype=np.uint64)
-        powers = np.uint64(1) << shifts
-
-        def one(h_list, n):
-            if h_list is None or n is None or n <= 0:
-                return None
-            h = np.asarray(h_list, dtype=np.uint64)
-            ones = ((h[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
-            sums = 2 * ones.astype(np.int64) - len(h)
-            return int(powers[sums > 0].sum())
-
-        return pd.Series(
-            [one(h, n) for h, n in zip(hs_series, n_series)], dtype="object"
-        )
-
-    return _fold
-
-
-def _simhash_col(hs, n_tokens, bits: int):
-    import os
-
-    if os.environ.get(ARROW_FOLD_ENV) == "1":
-        return _arrow_simhash_udf(bits)(hs, n_tokens)
-    return simhash_from_hashes_expr(hs, n_tokens, bits)
-
-
 def with_simhash(
     df: DataFrame, text_col: str = "text", out_col: str = "simhash",
     bits: int = SIMHASH_BITS, toks_col: str | None = None,
@@ -320,7 +272,7 @@ def with_simhash(
         "_hs", F.transform(F.col("_toks"), hexint)
     )
     out = step.withColumn(
-        out_col, _simhash_col(F.col("_hs"), F.size("_toks"), bits)
+        out_col, simhash_from_hashes_expr(F.col("_hs"), F.size("_toks"), bits)
     )
     return out.drop("_toks", "_hs")
 
@@ -353,8 +305,8 @@ def with_simhash_wide(
     )
     n = F.size("_toks")
     out = step.withColumn(
-        hi_col, _simhash_col(F.col("_hs1"), n, SIMHASH_BITS)
-    ).withColumn(lo_col, _simhash_col(F.col("_hs2"), n, SIMHASH_BITS))
+        hi_col, simhash_from_hashes_expr(F.col("_hs1"), n, SIMHASH_BITS)
+    ).withColumn(lo_col, simhash_from_hashes_expr(F.col("_hs2"), n, SIMHASH_BITS))
     return out.drop("_toks", "_hs1", "_hs2")
 
 

@@ -7,12 +7,68 @@ layout (immutable deltas folded at read time, compacted offline).
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 from collections.abc import Sequence
-from contextlib import contextmanager
+from contextlib import ExitStack, contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+# A swap parks the live dir under this prefix + its own name, in the same
+# parent. The dot hides the backup from Spark's file listing and from
+# ``sources.readers.register_views``.
+_OLD = "._old"
+
+
+def _backup(live: str) -> str:
+    head, tail = os.path.split(live)
+    return os.path.join(head, _OLD + tail)
+
+
+def _repair(live: str) -> None:
+    """Settle a ``_swap`` that a crash interrupted. A backup without its
+    ``live`` twin is the pre-swap content (the crash fell between the
+    rename-away and the rename-in): rename it back. A backup next to
+    ``live`` is debris of a finished swap: drop it. Every open of a table
+    runs this first, so no reader sees a half-swapped directory."""
+    old = _backup(live)
+    if not os.path.exists(old):
+        return
+    if os.path.exists(live):
+        shutil.rmtree(old, ignore_errors=True)
+    else:
+        os.rename(old, live)
+
+
+def _swap(live: str, new: str) -> None:
+    """The one directory commit: promote the fully-written dir ``new`` to
+    ``live`` by rename-away, rename-in, drop-backup. A crash at any step
+    leaves the old or the new content, and ``_repair`` restores or keeps
+    it on the next open (an in-place overwrite would delete ``live``
+    before the new content is committed). A missing ``new`` retires
+    ``live`` (a compacted bucket whose rows all died). Local-FS renames;
+    an object-store deployment swaps this seam for a commit protocol /
+    Delta."""
+    _repair(live)
+    old = _backup(live)
+    if os.path.exists(live):
+        os.rename(live, old)
+    if os.path.exists(new):
+        os.rename(new, live)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _write_atomic(path: str, text: str) -> None:
+    """The one file commit: write a sibling ``.tmp`` file, then
+    ``os.replace`` it over ``path``, so a reader sees the old or the new
+    content and never a torn file."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
 
 class TableStore:
     """Parquet-backed tables with read-modify-overwrite semantics.
@@ -35,6 +91,7 @@ class TableStore:
     def exists(self, name: str) -> bool:
         import glob
 
+        _repair(self.path(name))
         return (
             self.mor_exists(name)
             or bool(glob.glob(os.path.join(self.path(name), "*.parquet")))
@@ -74,6 +131,7 @@ class TableStore:
         become partition-scoped, incremental scans prune partitions, and
         with spark.sql.sources.partitionOverwriteMode=dynamic a merge
         rewrites only the partitions it touched."""
+        _repair(self.path(name))
         if self.mor_exists(name):
             # a plain parquet write next to a MOR layout would be INVISIBLE
             # (read() prefers the merged view) — route or refuse, never fork
@@ -104,6 +162,7 @@ class TableStore:
         of it, and concurrent readers of other partitions are unaffected.
         The conf is saved/restored so the session-wide STATIC default (the
         safe mode for full overwrites) still applies elsewhere."""
+        _repair(self.path(name))
         if self.mor_exists(name):
             raise ValueError(
                 f"table {name!r} uses the merge-on-read layout: partition-"
@@ -121,28 +180,9 @@ class TableStore:
             conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         self.spark.catalog.refreshByPath(self.path(name))
 
-    def _swap_in(self, name: str, tmp: str) -> None:
-        """Promote a fully-written temp dir via rename-rename: a crash
-        leaves either the old or the new table fully intact (overwrite
-        would delete the destination before committing — the non-atomic
-        window compact() was fixed for). Local-FS renames; an object-store
-        deployment swaps this seam for a commit protocol / Delta."""
-        import os
-        import shutil
-
-        path = self.path(name)
-        old = path + "._old"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(path):
-            os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
-        self.spark.catalog.refreshByPath(path)
-
     def rewrite(self, name: str, df: DataFrame) -> None:
         """Safe read-modify-write: materialize to a temp dir first (the
-        plan reads the files being replaced), then swap by rename.
+        plan reads the files being replaced), then ``_swap`` it in.
         refreshByPath invalidates Spark's cached file listing — without it
         later scans chase deleted part files.
 
@@ -151,40 +191,39 @@ class TableStore:
         was read through the merged view) and the deltas are cleared, so
         a stage-level rewrite (marts, enrich) never forks the table back
         into a COW layout the MOR readers would miss."""
-        if self.mor_exists(name):
-            with self._mor_writer_lock(name):
-                tmp = self._mor_dir(name, "base._tmp")
-                self._mor_write_base(name, df, tmp, self._mor_meta(name))
-                self._mor_swap_base(name, tmp)
-                self._mor_update_columns(name, df)
-            return
-        tmp = self.path(f"__tmp_{name}")
-        df.write.mode("overwrite").parquet(tmp)
-        self.spark.catalog.refreshByPath(tmp)
-        self._swap_in(name, tmp)
+        self._rewrite({name: df})
 
     def rewrite_many(self, updates: dict[str, DataFrame]) -> None:
         """Two-phase multi-table rewrite: materialize every plan to a temp
         dir FIRST, then swap — required when one table's new plan reads
-        another table being replaced in the same stage. MOR tables swap
-        their base (and clear deltas) instead of the COW dir."""
-        tmps = {}
-        for name, df in updates.items():
-            if self.mor_exists(name):
-                tmp = self._mor_dir(name, "base._tmp")
-                self._mor_write_base(name, df, tmp, self._mor_meta(name))
-            else:
-                tmp = self.path(f"__tmp_{name}")
-                df.write.mode("overwrite").parquet(tmp)
-                self.spark.catalog.refreshByPath(tmp)
-            tmps[name] = tmp
-        for name, tmp in tmps.items():
-            if self.mor_exists(name):
-                with self._mor_writer_lock(name):
+        another table being replaced in the same stage. Each table's swap
+        is crash-safe on its own; the set of swaps is not atomic."""
+        self._rewrite(updates)
+
+    def _rewrite(self, updates: dict[str, DataFrame]) -> None:
+        """Shared body of ``rewrite`` and ``rewrite_many``. A MOR table
+        holds its writer lock from its base write through the swap and
+        the _META update."""
+        with ExitStack() as locks:
+            staged = {}
+            for name, df in updates.items():
+                mor = self.mor_exists(name)
+                if mor:
+                    locks.enter_context(self._mor_writer_lock(name))
+                    tmp = self._mor_dir(name, "base._tmp")
+                    self._mor_write_base(name, df, tmp, self._mor_meta(name))
+                else:
+                    tmp = self.path(f"__tmp_{name}")
+                    df.write.mode("overwrite").parquet(tmp)
+                    self.spark.catalog.refreshByPath(tmp)
+                staged[name] = (tmp, mor)
+            for name, (tmp, mor) in staged.items():
+                if mor:
                     self._mor_swap_base(name, tmp)
                     self._mor_update_columns(name, updates[name])
-            else:
-                self._swap_in(name, tmp)
+                else:
+                    _swap(self.path(name), tmp)
+                    self.spark.catalog.refreshByPath(self.path(name))
 
     # -- snapshot versioning (Delta-lite time travel) ----------------------
     # Each write lands in an immutable {table}/_v/{N}/ dir; a one-line
@@ -219,10 +258,7 @@ class TableStore:
     def write_snapshot(self, name: str, df: DataFrame) -> int:
         version = (self.latest_snapshot(name) or 0) + 1
         df.write.mode("overwrite").parquet(self._vdir(name, version))
-        tmp = self._pointer(name) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, self._pointer(name))  # atomic pointer flip
+        _write_atomic(self._pointer(name), str(version))
         return version
 
     def read_snapshot(self, name: str, version: int | None = None) -> DataFrame:
@@ -234,16 +270,11 @@ class TableStore:
     def rollback(self, name: str, version: int) -> None:
         if version not in self.snapshots(name):
             raise ValueError(f"version {version} not retained for {name!r}")
-        tmp = self._pointer(name) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, self._pointer(name))
+        _write_atomic(self._pointer(name), str(version))
 
     def vacuum_snapshots(self, name: str, keep: int = 2) -> list[int]:
         """Drop all but the newest ``keep`` snapshots (never the pointer
         target). Returns the removed versions."""
-        import shutil
-
         current = self.latest_snapshot(name)
         vs = self.snapshots(name)
         removable = [v for v in vs[:-keep] if v != current] if keep > 0 else []
@@ -268,8 +299,6 @@ class TableStore:
         return os.path.join(self.path(name), "_mor", *parts)
 
     def _mor_meta(self, name: str) -> dict:
-        import json
-
         with open(self._mor_dir(name, "_META")) as f:
             return json.load(f)
 
@@ -287,7 +316,7 @@ class TableStore:
         ``_mor/_LOCK``, non-blocking: the OS releases it if the holder
         dies, so a crashed writer never wedges the table. Local-FS
         semantics; an object-store deployment swaps this seam for a lease
-        (the same seam note as ``_swap_in``). Readers never take the lock:
+        (the same seam note as ``_swap``). Readers never take the lock:
         ``mor_read`` is safe against a concurrent upsert (delta register
         is one atomic rename) — only compaction/base-swaps additionally
         assume no concurrent reader mid-swap (see ``mor_compact``)."""
@@ -328,8 +357,6 @@ class TableStore:
         _META convenience update can no longer leave new base files read
         under a stale explicit schema (added columns vanishing, dropped
         columns reading as null)."""
-        import json
-
         if meta.get("buckets"):
             (
                 df.withColumn("_bucket", self._mor_bucket_expr(meta))
@@ -349,38 +376,12 @@ class TableStore:
         in-base ``_SCHEMA.json`` sidecar when present (committed atomically
         WITH the data by the base-swap rename), else the _META copy
         (pre-sidecar tables)."""
-        import json
-
         side = self._mor_dir(name, "base", "_SCHEMA.json")
         try:
             with open(side) as f:
                 return json.load(f)
         except FileNotFoundError:
             return {"columns": meta.get("columns"), "schema": meta.get("schema")}
-
-    def _mor_repair_buckets(self, name: str) -> None:
-        """Finish or roll back a bucket swap interrupted mid-rename: a
-        ``._old_bucket=N`` dir whose ``_bucket=N`` twin is missing is the
-        pre-swap content (crash between rename-away and rename-in) —
-        restore it; one whose twin exists is already-swapped debris —
-        drop it. Dot-prefixed dirs are invisible to Spark's partition
-        discovery, so a half-finished swap never double-counts."""
-        import shutil
-
-        basedir = self._mor_dir(name, "base")
-        try:
-            entries = os.listdir(basedir)
-        except FileNotFoundError:
-            return
-        for e in entries:
-            if not e.startswith("._old_bucket="):
-                continue
-            live = os.path.join(basedir, e[len("._old") :])
-            old = os.path.join(basedir, e)
-            if os.path.exists(live):
-                shutil.rmtree(old, ignore_errors=True)
-            else:
-                os.rename(old, live)
 
     def mor_init(
         self,
@@ -432,8 +433,6 @@ class TableStore:
         ``store.read(name)``) deletes the stale top-level COW files after
         the base materializes, so nothing can silently read pre-migration
         data through a direct parquet path."""
-        import json
-
         if "_deleted" in df.columns:
             df = df.where(~F.coalesce(F.col("_deleted"), F.lit(False))).drop(
                 "_deleted"
@@ -458,25 +457,20 @@ class TableStore:
             meta["buckets"] = int(buckets)
         self._mor_write_base(name, df, self._mor_dir(name, "base"), meta)
         os.makedirs(self._mor_dir(name, "delta"), exist_ok=True)
-        tmp = self._mor_dir(name, "_META.tmp")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._mor_dir(name, "_META"))
+        _write_atomic(self._mor_dir(name, "_META"), json.dumps(meta))
         # the base write above already materialized everything it read.
         # Remove EVERY stale COW artifact — including partition
         # subdirectories from a partition_by write — keeping only the MOR
         # layout and the snapshot store (_v/_LATEST): anything else left
         # behind would let a direct parquet read of the table path see
         # pre-migration data.
-        import shutil as _shutil
-
         keep = {"_mor", "_v", "_LATEST", "_LATEST.tmp"}
         for entry in os.listdir(self.path(name)):
             if entry in keep:
                 continue
             full = os.path.join(self.path(name), entry)
             if os.path.isdir(full):
-                _shutil.rmtree(full)
+                shutil.rmtree(full)
             else:
                 os.remove(full)
         self.spark.catalog.refreshByPath(self.path(name))
@@ -490,8 +484,6 @@ class TableStore:
         statement is reinterpreted. Changing an EXISTING policy is
         refused: old deltas' classes would silently change meaning
         (per-statement overrides are the supported path for that)."""
-        import json
-
         with self._mor_writer_lock(name):
             meta = self._mor_meta(name)
             if meta.get("policy") is not None:
@@ -509,10 +501,7 @@ class TableStore:
                 "coalesce": list(policy.get("coalesce", ())),
                 "keep_first": list(policy.get("keep_first", ())),
             }
-            tmp = self._mor_dir(name, "_META.tmp")
-            with open(tmp, "w") as f:
-                json.dump(meta, f)
-            os.replace(tmp, self._mor_dir(name, "_META"))
+            _write_atomic(self._mor_dir(name, "_META"), json.dumps(meta))
 
     def mor_deltas(self, name: str) -> list[int]:
         import glob
@@ -584,7 +573,6 @@ class TableStore:
         # ones, which no live writer can own under this code).
         tmp = f"{final}.tmp.{os.getpid()}"
         import glob as _glob
-        import shutil
 
         for stale in _glob.glob(self._mor_dir(name, "delta", "*.tmp*")):
             suffix = stale.rsplit(".tmp", 1)[1]
@@ -630,8 +618,6 @@ class TableStore:
                 "row(s); a delta is a statement (at most one row per key per batch)"
             )
         if classes is not None:
-            import json
-
             with open(os.path.join(tmp, "_CLASSES.json"), "w") as f:
                 json.dump({k: sorted(v) for k, v in classes.items() if v}, f)
         os.rename(tmp, final)
@@ -680,10 +666,7 @@ class TableStore:
         # LAZY localCheckpoint: first consumer materializes, later ones
         # read the blocks. Intra-TableStore only (runner builds one store
         # per run) — nothing persists across runs. At cluster scale the
-        # same seam is a durable checkpoint / persist(DISK) decision;
-        # JOBSPARK_MOR_READ_MEMO=0 opts out.
-        if os.environ.get("JOBSPARK_MOR_READ_MEMO", "1") == "0":
-            return self._mor_apply_deltas(name, meta, base, seqs)
+        # same seam is a durable checkpoint / persist(DISK) decision.
         try:
             base_stamp = os.stat(self._mor_dir(name, "base")).st_mtime_ns
         except OSError:
@@ -709,8 +692,6 @@ class TableStore:
         """Resolve the delta stack against ``base`` (the full base for
         reads; a bucket-filtered base for partition-scoped compaction —
         valid because every delta key hashes into the touched buckets)."""
-        import json
-
         keys = meta["keys"]
         policy = meta.get("policy")
         deltas = None
@@ -792,37 +773,24 @@ class TableStore:
         return survivors.unionByName(live)
 
     def _mor_swap_base(self, name: str, tmp: str) -> None:
-        """Promote a fully-written replacement base and clear the delta
-        stack (the replacement was computed FROM the merged view, so the
-        deltas are now folded in). Same rename-rename crash contract as
-        ``_swap_in``."""
-        import shutil
-
-        old = self._mor_dir(name, "base._old")
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        os.rename(self._mor_dir(name, "base"), old)
-        os.rename(tmp, self._mor_dir(name, "base"))
+        """``_swap`` a fully-written replacement base in and clear the
+        delta stack (the replacement was computed FROM the merged view, so
+        the deltas are now folded in)."""
+        _swap(self._mor_dir(name, "base"), tmp)
         for s in self.mor_deltas(name):
             shutil.rmtree(self._mor_dir(name, "delta", str(s)), ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
         self.spark.catalog.refreshByPath(self._mor_dir(name, "base"))
 
     def _mor_update_columns(self, name: str, df: DataFrame) -> None:
         """Record a base schema change (a stage-level rewrite may add or
         drop columns); atomic pointer-style _META replace."""
-        import json
-
         meta = self._mor_meta(name)
         schema_json = df.schema.json()
         if meta.get("columns") == list(df.columns) and meta.get("schema") == schema_json:
             return
         meta["columns"] = list(df.columns)
         meta["schema"] = schema_json
-        tmp = self._mor_dir(name, "_META.tmp")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._mor_dir(name, "_META"))
+        _write_atomic(self._mor_dir(name, "_META"), json.dumps(meta))
 
     def _mor_read_base(self, name: str, meta: dict) -> DataFrame:
         """Base scan under the table's layout. The explicit schema is
@@ -832,20 +800,23 @@ class TableStore:
         files for zero rows), and explicit schemas skip footer inference
         everywhere else. The ``_bucket`` partition column is appended for
         bucketed layouts so compaction can prune on it; plain reads
-        select it away."""
-        import json as _json
-
+        select it away. Opening the base first settles any interrupted
+        base or bucket ``_swap``."""
         from pyspark.sql.types import LongType, StructField, StructType
 
+        basedir = self._mor_dir(name, "base")
+        _repair(basedir)
         if meta.get("buckets"):
-            self._mor_repair_buckets(name)
+            for e in os.listdir(basedir):
+                if e.startswith(_OLD):
+                    _repair(os.path.join(basedir, e[len(_OLD) :]))
         schema_json = self._mor_base_info(name, meta).get("schema")
         if schema_json is None:  # pre-r10 table: infer as before
-            return self.spark.read.parquet(self._mor_dir(name, "base"))
-        st = StructType.fromJson(_json.loads(schema_json))
+            return self.spark.read.parquet(basedir)
+        st = StructType.fromJson(json.loads(schema_json))
         if meta.get("buckets"):
             st = StructType(st.fields + [StructField("_bucket", LongType())])
-        return self.spark.read.schema(st).parquet(self._mor_dir(name, "base"))
+        return self.spark.read.schema(st).parquet(basedir)
 
     def mor_compact(self, name: str) -> int:
         """Single-writer-locked entry point for ``_mor_compact_locked``
@@ -862,12 +833,12 @@ class TableStore:
         crash contract as rewrite()). BUCKETED tables rewrite ONLY the
         buckets the delta keys hash into — at 100 TB an amortized full
         rewrite is the dominant write cost, while touched buckets track
-        the delta key set, not the table. The per-bucket swap is
-        rename-away → rename-in with dot-prefixed backups; a crash at any
-        point is repaired by ``_mor_repair_buckets`` (run before every
-        read), and because each delta is a merge STATEMENT the fold is
-        idempotent over its own result — re-applying the surviving deltas
-        to an already-compacted bucket reproduces the same rows.
+        the delta key set, not the table. Every bucket commits through
+        ``_swap``; a crash at any point is repaired by ``_repair`` (run
+        before every read), and because each delta is a merge STATEMENT
+        the fold is idempotent over its own result — re-applying the
+        surviving deltas to an already-compacted bucket reproduces the
+        same rows.
 
         Concurrency contract (matches the enrich-stage ordering comment
         for the flat path): compaction is CRASH-safe but not concurrent-
@@ -884,17 +855,12 @@ class TableStore:
         if not seqs:
             return 0
         meta = self._mor_meta(name)
+        tmp = self._mor_dir(name, "base._tmp")
         if not meta.get("buckets"):
-            merged = self.mor_read(name)
-            tmp = self._mor_dir(name, "base._tmp")
-            merged.write.mode("overwrite").parquet(tmp)
-            self.spark.catalog.refreshByPath(tmp)
+            self._mor_write_base(name, self.mor_read(name), tmp, meta)
             self._mor_swap_base(name, tmp)
             return len(seqs)
 
-        import shutil
-
-        self._mor_repair_buckets(name)
         keys = meta["keys"]
         # touched buckets = hash of every delta key (tombstones included);
         # the collect is bounded by the bucket count, never by data size
@@ -916,7 +882,6 @@ class TableStore:
             *self._mor_base_info(name, meta)["columns"]
         )
         merged = self._mor_apply_deltas(name, meta, base, seqs)
-        tmp = self._mor_dir(name, "base._tmp")
         shutil.rmtree(tmp, ignore_errors=True)
         (
             merged.withColumn("_bucket", self._mor_bucket_expr(meta))
@@ -926,15 +891,10 @@ class TableStore:
             .parquet(tmp)
         )
         for b in touched:
-            live = self._mor_dir(name, "base", f"_bucket={b}")
-            old = self._mor_dir(name, "base", f"._old_bucket={b}")
-            new = os.path.join(tmp, f"_bucket={b}")
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.exists(live):
-                os.rename(live, old)
-            if os.path.exists(new):  # a bucket whose rows all died has no dir
-                os.rename(new, live)
-            shutil.rmtree(old, ignore_errors=True)
+            _swap(
+                self._mor_dir(name, "base", f"_bucket={b}"),
+                os.path.join(tmp, f"_bucket={b}"),
+            )
         shutil.rmtree(tmp, ignore_errors=True)
         for s in seqs:
             shutil.rmtree(self._mor_dir(name, "delta", str(s)), ignore_errors=True)

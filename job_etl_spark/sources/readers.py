@@ -39,12 +39,16 @@ def load_all_seeds(spark: SparkSession, seed_dir: str | Path | None = None) -> d
 
 def register_views(spark: SparkSession, sf_dir: str, warehouse: str | None = None) -> None:
     """Register the driver tables (+ optional warehouse tables) as temp
-    views for spark.sql usage."""
+    views for spark.sql usage. Warehouse tables are read through
+    ``TableStore``, so a merge-on-read table registers its merged view;
+    dot-prefixed swap backups and ``__tmp_`` staging dirs are skipped."""
+    from job_etl_spark.pipeline.store import TableStore
     from job_etl_spark.tables import register_all
 
     register_all(spark, sf_dir)
     if warehouse:
+        store = TableStore(spark, warehouse)
         for entry in sorted(os.listdir(warehouse)):
             p = os.path.join(warehouse, entry)
-            if os.path.isdir(p) and not entry.startswith("__tmp_"):
-                spark.read.parquet(p).createOrReplaceTempView(entry)
+            if os.path.isdir(p) and not entry.startswith((".", "__tmp_")):
+                store.read(entry).createOrReplaceTempView(entry)

@@ -132,39 +132,3 @@ def test_banded_near_threshold_pairs_exact(spark):
         for r in simhash_block_pairs(df, ("blk",), max_hamming=8, bits=60).collect()
     }
     assert got == {(1, 2, 8), (2, 3, 1)}  # (1,3) is 9 bits apart — excluded
-
-
-def test_arrow_fold_matches_expr_fold(spark, monkeypatch):
-    """JOBSPARK_ARROW_FOLD=1 (the vectorized numpy signature fold) must be
-    bit-identical to the default interpreted-HOF fold — same strict-
-    positive rule, same integer math — including empty/NULL texts and the
-    wide (two-half) signature."""
-    from job_etl_spark.ml.dedup import ARROW_FOLD_ENV, with_simhash, with_simhash_wide
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumps over the lazy cat"),
-            (3, ""),
-            (4, None),
-            (5, "a"),
-            (6, "repeat repeat repeat repeat repeat repeat repeat"),
-        ],
-        "doc_id long, text string",
-    )
-    monkeypatch.delenv(ARROW_FOLD_ENV, raising=False)
-    expr_rows = sorted(
-        with_simhash(docs).select("doc_id", "simhash").collect()
-    )
-    expr_wide = sorted(
-        with_simhash_wide(docs).select("doc_id", "sim_hi", "sim_lo").collect()
-    )
-    monkeypatch.setenv(ARROW_FOLD_ENV, "1")
-    arrow_rows = sorted(
-        with_simhash(docs).select("doc_id", "simhash").collect()
-    )
-    arrow_wide = sorted(
-        with_simhash_wide(docs).select("doc_id", "sim_hi", "sim_lo").collect()
-    )
-    assert arrow_rows == expr_rows
-    assert arrow_wide == expr_wide

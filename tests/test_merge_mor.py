@@ -155,7 +155,7 @@ def test_fold_tombstone_revive_of_base_key(spark):
     assert out["a"]["co"] is None and out["a"]["kf"] is None and out["a"]["other"] is None
 
 
-def test_policy_mor_read_never_shuffles_base(spark, tmp_path, monkeypatch):
+def test_policy_mor_read_never_shuffles_base(spark, tmp_path):
     """The physical plan of a policy-table mor_read must keep the base out
     of every exchange: the delta fold windows over delta rows only, and
     the base merge is broadcast-shaped (merge_upsert_onto) — BroadcastHash
@@ -163,12 +163,12 @@ def test_policy_mor_read_never_shuffles_base(spark, tmp_path, monkeypatch):
     is base-scan + delta-sized work, never an O(table) shuffle.
 
     The r12 per-run read memo wraps mor_read in a lazy localCheckpoint
-    whose post-materialization plan is a block scan — opt out here so the
-    assertion still sees the FOLD plan (the memo adds a node above it,
-    it does not change the fold; test_mor_read_memo covers the memo)."""
+    whose post-materialization plan is a block scan — build the fold
+    directly here so the assertion still sees the FOLD plan (the memo
+    adds a node above it, it does not change the fold;
+    test_mor_read_memo covers the memo)."""
     from job_etl_spark.pipeline.runner import TableStore
 
-    monkeypatch.setenv("JOBSPARK_MOR_READ_MEMO", "0")
     store = TableStore(spark, str(tmp_path))
     base = spark.range(0, 1000).selectExpr(
         "cast(id as string) k", "'ow-b' ow", "'co-b' co", "'kf-b' kf", "cast(null as string) other"
@@ -183,7 +183,10 @@ def test_policy_mor_read_never_shuffles_base(spark, tmp_path, monkeypatch):
     )
     store.mor_upsert("t", upd)
     store.mor_upsert("t", upd.withColumn("ow", F.lit("ow-2")))
-    merged = store.mor_read("t")
+    meta = store._mor_meta("t")
+    merged = store._mor_apply_deltas(
+        "t", meta, store._mor_read_base("t", meta), store.mor_deltas("t")
+    )
     assert merged.count() == 1000
     plan = merged._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan, plan
@@ -642,12 +645,7 @@ def test_mor_read_memo(spark, tmp_path):
     rows3 = {(r["k"], r["v"]) for r in m3.collect()}
     assert ("5", 2000) in rows3 and len(rows3) == 100
 
-    # memoized view == fresh (opt-out) fold, bit-for-bit
-    import os
-
-    os.environ["JOBSPARK_MOR_READ_MEMO"] = "0"
-    try:
-        fresh = {(r["k"], r["v"]) for r in store.mor_read("t").collect()}
-    finally:
-        del os.environ["JOBSPARK_MOR_READ_MEMO"]
+    # memoized view == fresh (memo cleared) fold, bit-for-bit
+    store._merged_memo.clear()
+    fresh = {(r["k"], r["v"]) for r in store.mor_read("t").collect()}
     assert fresh == rows3

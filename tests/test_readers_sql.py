@@ -39,3 +39,27 @@ def test_sql_entry_point_over_views(spark):
     load_all_seeds(spark)
     n = spark.sql("SELECT COUNT(*) AS n FROM contract_type").first()["n"]
     assert n == 6
+
+
+def test_register_views_reads_mor_tables_and_skips_swap_debris(spark, tmp_path):
+    """A merge-on-read table keeps every file under the hidden ``_mor/``
+    dir, so a raw parquet read of it cannot infer a schema: the view must
+    be the merged view. Swap backups and staging dirs are not tables."""
+    import os
+
+    from job_etl_spark.pipeline.store import TableStore
+
+    wh = str(tmp_path)
+    store = TableStore(spark, wh)
+    store.write("jobs", spark.range(10).selectExpr("cast(id as string) k", "id v"))
+    store.mor_init("jobs", store.read("jobs"), ["k"])
+    store.mor_upsert(
+        "jobs", spark.createDataFrame([("3", 300), ("10", 1000)], "k string, v long")
+    )
+    os.makedirs(os.path.join(wh, "._oldjobs"))
+    os.makedirs(os.path.join(wh, "__tmp_jobs"))
+    register_views(spark, SF_SMOKE, warehouse=wh)
+    out = spark.sql("SELECT COUNT(*) AS n, SUM(v) AS s FROM jobs").first()
+    assert (out["n"], out["s"]) == (11, sum(range(10)) - 3 + 300 + 1000)
+    views = {t.name for t in spark.catalog.listTables()}
+    assert "._oldjobs" not in views and "__tmp_jobs" not in views
