@@ -233,7 +233,7 @@ def simhash_from_hashes_expr(hs: Column, n_tokens: Column, bits: int = SIMHASH_B
     instead of materializing a contrib array first and zip-adding it —
     same integer adds in the same order (bit-identical), one interpreted
     traversal + one allocation per token saved; measured 0.293 → 0.246 s
-    per sf0.1 corpus pass (scripts/fold_probe.py, r12). NULL for empty
+    per sf0.1 corpus pass (r12 A/B, row equality asserted). NULL for empty
     token lists."""
     powers = lit_bigint_array(1 << j for j in range(bits))
 

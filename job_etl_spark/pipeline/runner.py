@@ -101,22 +101,10 @@ def run_normalize(
         n_bad = res.rejected.count()
         if not dry_run:
             if mor:
-                from job_etl_spark.pipeline.normalize import staging_merge_policy
-
-                if not store.mor_exists("staging_job_postings"):
-                    store.mor_init(
-                        "staging_job_postings",
-                        store.read("staging_job_postings", STAGING_SCHEMA),
-                        ["hash_key"],
-                        policy=staging_merge_policy(),
-                        buckets=mor_buckets,
-                    )
+                _ensure_staging_mor(store, mor_buckets)
                 if n_ok:  # an empty batch must not grow the delta chain
                     store.mor_upsert("staging_job_postings", normalized)
-                    if compact_every and len(
-                        store.mor_deltas("staging_job_postings")
-                    ) >= compact_every:
-                        store.mor_compact("staging_job_postings")
+                    _compact_if_due(store, "staging_job_postings", compact_every)
             else:
                 staging = store.read("staging_job_postings", STAGING_SCHEMA)
                 merged = merge_into_staging(staging, normalized)
@@ -155,16 +143,8 @@ def run_enrich(
     ``fold_upsert_statements`` bit-identically to the COW chain."""
     run_ts = run_ts or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     # a dry run must not mutate ANYTHING, the layout included
-    if mor and not dry_run and not store.mor_exists("staging_job_postings"):
-        from job_etl_spark.pipeline.normalize import staging_merge_policy
-
-        store.mor_init(
-            "staging_job_postings",
-            store.read("staging_job_postings", STAGING_SCHEMA),
-            ["hash_key"],
-            policy=staging_merge_policy(),
-            buckets=mor_buckets,
-        )
+    if mor and not dry_run:
+        _ensure_staging_mor(store, mor_buckets)
     staging = store.read("staging_job_postings", STAGING_SCHEMA)
     dictionary = SkillsDictionary.load(dictionary_path)
     pending_rows = None
@@ -200,8 +180,6 @@ def run_enrich(
             ).count()
             enriched = enrich_skills(staging, dictionary, sources, include_existing)
             enriched = enrich_seniority(enriched)
-        from job_etl_spark.schema import StructType  # noqa: F401
-
         companies_schema = (
             "company_id string, name string, source_first_seen string, "
             "enriched_at timestamp, created_at timestamp, updated_at timestamp"
@@ -261,10 +239,7 @@ def run_enrich(
                 # 1-in-N compaction swaps the base, so compact strictly last
                 store.rewrite("staging_companies", companies2)
                 stats["companies_total"] = store.read("staging_companies").count()
-                if compact_every and len(
-                    store.mor_deltas("staging_job_postings")
-                ) >= compact_every:
-                    store.mor_compact("staging_job_postings")
+                _compact_if_due(store, "staging_job_postings", compact_every)
             else:
                 # companies2's plan reads staging; two-phase swap avoids reading
                 # files deleted by the staging rewrite
@@ -276,6 +251,29 @@ def run_enrich(
     finally:
         if pending_rows is not None:
             pending_rows.unpersist()
+
+
+def _ensure_staging_mor(store: TableStore, buckets: int | None) -> None:
+    """One shared staging_job_postings MOR table spec for both writers
+    (normalize batch + enrich pending delta): keyed on hash_key under
+    ``staging_merge_policy``; the first call migrates the COW files."""
+    from job_etl_spark.pipeline.normalize import staging_merge_policy
+
+    if not store.mor_exists("staging_job_postings"):
+        store.mor_init(
+            "staging_job_postings",
+            store.read("staging_job_postings", STAGING_SCHEMA),
+            ["hash_key"],
+            policy=staging_merge_policy(),
+            buckets=buckets,
+        )
+
+
+def _compact_if_due(store: TableStore, name: str, compact_every: int) -> None:
+    """Fold ``name``'s delta chain into a new base once it holds
+    ``compact_every`` deltas (0 never compacts)."""
+    if compact_every and len(store.mor_deltas(name)) >= compact_every:
+        store.mor_compact(name)
 
 
 def _ensure_fact_mor(store: TableStore, buckets: int | None) -> None:
@@ -408,8 +406,7 @@ def _run_marts_mor(
                 store.mor_upsert("fact_jobs", inc)
         finally:
             inc.unpersist()
-        if compact_every and len(store.mor_deltas("fact_jobs")) >= compact_every:
-            store.mor_compact("fact_jobs")
+        _compact_if_due(store, "fact_jobs", compact_every)
     stats["dim_rows"] = store.read("dim_companies").count()
     stats["fact_rows"] = store.read("fact_jobs").count()
     return stats
@@ -579,8 +576,6 @@ def run_pipeline(
 def run_publish(store: TableStore, out_dir: str) -> dict:
     """S11 stage: capped export of both mart tables
     (reference CLI surface ``services/publisher_hyper/main.py:18-22``)."""
-    from job_etl_spark.pipeline import report as report_mod
-
     fact = store.read("fact_jobs")
     dim = store.read("dim_companies")
     return report_mod.export_tables(fact, dim, out_dir)
@@ -724,10 +719,8 @@ def main(argv: list[str] | None = None) -> int:
             elif args.stage == "marts":
                 stats = run_marts(store, mor=args.mor, mor_buckets=args.mor_buckets)
             elif args.stage == "normalize":
-                import datetime as _dt
-
                 wm = (
-                    _dt.datetime.fromisoformat(args.min_collected_at)
+                    dt.datetime.fromisoformat(args.min_collected_at)
                     if args.min_collected_at
                     else None
                 )

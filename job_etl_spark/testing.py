@@ -54,6 +54,11 @@ def _key(row):
     return str(row)
 
 
+def sorted_rows(rows) -> list[tuple]:
+    """Rows as the order-insensitive, normalized tuples parity compares."""
+    return sorted((tuple(_norm(v) for v in r) for r in rows), key=_key)
+
+
 @dataclass
 class ParityResult:
     name: str
@@ -105,14 +110,14 @@ def _driver_canon(pdf: pd.DataFrame) -> list[str]:
 def check_query(spark, sf_dir: str, name: str, fn, oracle: str | None) -> ParityResult:
     sdf = fn(spark, sf_dir)
     collected = sdf.collect()
-    srows = sorted((tuple(_norm(v) for v in r) for r in collected), key=_key)
+    srows = sorted_rows(collected)
     if oracle is None:
         return ParityResult(name, True, f"rows-only: {len(srows)} rows")
     con = duck_connection(sf_dir)
     try:
         res = con.execute(oracle)
         dcols = [d[0] for d in res.description]
-        drows = sorted((tuple(_norm(v) for v in r) for r in res.fetchall()), key=_key)
+        drows = sorted_rows(res.fetchall())
         dpdf = con.execute(oracle).df()
     finally:
         con.close()

@@ -28,7 +28,56 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from scripts.mor_marts_probe import companies_frame, staging_frame  # noqa: E402
+SEED_TS = "2026-01-01 00:00:00"
+SEED_TAG = "Co "
+SEED_COMPANIES = 1009
+
+
+def staging_frame(spark, n: int):
+    """N fully enriched staging rows over SEED_COMPANIES companies."""
+    from pyspark.sql import functions as F
+
+    tag = F.lit(SEED_TAG)
+    seen = F.to_timestamp(F.lit(SEED_TS))
+    return spark.range(n).select(
+        F.md5(F.concat(tag, F.col("id").cast("string"))).alias("hash_key"),
+        F.concat(F.lit("job-"), tag, F.col("id")).alias("provider_job_id"),
+        F.lit(None).cast("string").alias("job_link"),
+        F.concat(F.lit("Senior Engineer "), F.col("id") % 977).alias("job_title"),
+        F.concat(tag, F.col("id") % SEED_COMPANIES).alias("company"),
+        F.lit("unknown").alias("company_size"),
+        F.concat(F.lit("City "), F.col("id") % 499).alias("location"),
+        F.lit("remote").alias("remote_type"),
+        F.lit("full_time").alias("contract_type"),
+        F.lit("senior").alias("seniority_level"),
+        F.lit("upgraded").alias("seniority_enrichment_status"),
+        F.lit(50000.0).alias("salary_min"),
+        F.lit(90000.0).alias("salary_max"),
+        F.lit("USD").alias("salary_currency"),
+        F.concat(F.lit("python and spark, desc "), F.col("id")).alias("description"),
+        F.array(F.lit("python")).alias("skills_raw"),
+        F.lit(None).cast("timestamp").alias("posted_at"),
+        F.lit(None).cast("string").alias("apply_url"),
+        F.lit("mock").alias("source"),
+        seen.alias("first_seen_at"),
+        seen.alias("last_seen_at"),
+    )
+
+
+def companies_frame(spark, n: int):
+    """The n seed companies the staging rows name."""
+    from pyspark.sql import functions as F
+
+    tag = F.lit(SEED_TAG)
+    created = F.to_timestamp(F.lit(SEED_TS))
+    return spark.range(n).select(
+        F.md5(F.concat(tag, F.col("id").cast("string"))).alias("company_id"),
+        F.concat(tag, F.col("id")).alias("name"),
+        F.lit("mock").alias("source_first_seen"),
+        F.lit(None).cast("timestamp").alias("enriched_at"),
+        created.alias("created_at"),
+        created.alias("updated_at"),
+    )
 
 
 def seed_warehouse(spark, store, n: int) -> None:
@@ -38,14 +87,8 @@ def seed_warehouse(spark, store, n: int) -> None:
 
     from job_etl_spark.pipeline.marts import fact_projection
 
-    store.write(
-        "staging_job_postings",
-        staging_frame(spark, spark.range(n), "2026-01-01 00:00:00", "Co ", 1009),
-    )
-    store.write(
-        "staging_companies",
-        companies_frame(spark, min(n, 1009), "Co ", "2026-01-01 00:00:00"),
-    )
+    store.write("staging_job_postings", staging_frame(spark, n))
+    store.write("staging_companies", companies_frame(spark, min(n, SEED_COMPANIES)))
     fact = (
         fact_projection(store.read("staging_job_postings"), dt.datetime(2026, 1, 2))
         .withColumn("rank_score", F.lit(42.0))

@@ -1,35 +1,109 @@
-"""Per-job/per-stage breakdown for one or more queries.
+"""Per-query Spark layers and per-operator SQL metrics, read from the event log.
 
-Runs each query to the noop sink in a bench-config session with the UI
-enabled, then reads the UI REST API: per-job wall-clock, stage task
-counts/times, and the driver-side gaps between jobs (planning/collect
-overhead that no stage accounts for). Guide §1 companion to
-scripts/time_query.py.
+Runs each query to the noop sink in a ``get_spark`` session, after the
+q01 warm-up time_query.py uses, and tags every run with ``setJobGroup``.
+The session's JVM starts with an uncompressed, non-rolling event log,
+switched on through a temporary SPARK_CONF_DIR as perfbench/run.py does.
+After the session stops, ``perfbench.trace`` parses that log. For each
+query's best (lowest-wall) run it prints:
 
-Usage: python scripts/profile_query.py q158 q101 [--sf DIR] [--runs 2]
+- jobs, stages and tasks;
+- job time (the union of job intervals) and the driver gap (wall minus
+  job time: planning, collects and scheduling that no job covers);
+- input, shuffle-read and shuffle-write bytes;
+- the row, time and size metrics of every physical operator in the
+  run's last SQL execution (its final adaptive plan).
+
+Usage: python scripts/profile_query.py q58 q104 [--sf DIR] [--runs 2]
 """
 
 from __future__ import annotations
 
 import argparse
-import datetime as dt
 import json
+import os
 import sys
+import tempfile
 import time
-import urllib.request
+from collections import defaultdict
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+_SQL_UI = "org.apache.spark.sql.execution.ui."
+# metric names worth a column: rows, times, sizes and the broadcast/collect phases
+_KEEP = ("rows", "time", "size", "build", "collect")
 
-def _get(url: str):
-    with urllib.request.urlopen(url, timeout=10) as r:
-        return json.loads(r.read())
+
+def sql_executions(lines) -> tuple[dict[int, dict], dict[int, float]]:
+    """SQL executions and accumulator totals from event-log JSON lines.
+
+    Executions map id → {"group", "plan" (the last plan AQE reported),
+    "ms"}; totals map accumulator id → the sum of its task and driver
+    updates, which is the value the SQL UI shows for a metric."""
+    execs: dict[int, dict] = {}
+    totals: dict[int, float] = defaultdict(float)
+    for line in lines:
+        e = json.loads(line)
+        kind = e.get("Event")
+        if kind == _SQL_UI + "SparkListenerSQLExecutionStart":
+            execs[e["executionId"]] = {
+                "group": e.get("jobGroupId") or "",
+                "plan": e["sparkPlanInfo"],
+                "start": e["time"],
+                "ms": None,
+            }
+        elif kind == _SQL_UI + "SparkListenerSQLAdaptiveExecutionUpdate":
+            execs[e["executionId"]]["plan"] = e["sparkPlanInfo"]
+        elif kind == _SQL_UI + "SparkListenerSQLExecutionEnd":
+            ex = execs[e["executionId"]]
+            ex["ms"] = e["time"] - ex["start"]
+        elif kind == _SQL_UI + "SparkListenerDriverAccumUpdates":
+            for aid, value in e["accumUpdates"]:
+                totals[aid] += value
+        elif kind == "SparkListenerTaskEnd":
+            for acc in (e.get("Task Info") or {}).get("Accumulables", []):
+                if acc.get("Metadata") == "sql":  # updates are logged as strings
+                    totals[acc["ID"]] += float(acc["Update"])
+    return execs, dict(totals)
 
 
-def _parse_ts(s: str) -> float:
-    # "2026-08-17T12:34:56.789GMT"
-    return dt.datetime.strptime(s.replace("GMT", "+0000"), "%Y-%m-%dT%H:%M:%S.%f%z").timestamp()
+def _fmt(value: float, metric_type: str) -> str:
+    if metric_type == "nsTiming":
+        return f"{value / 1e6:.1f}ms"
+    if metric_type == "timing":
+        return f"{value:.0f}ms"
+    if metric_type == "size":
+        return f"{value / 1024 / 1024:.2f}MB"
+    return f"{value:.0f}"
+
+
+def operator_lines(plan: dict, totals: dict[int, float], depth: int = 0):
+    """One line per physical operator that reports a kept metric, indented
+    under the nearest printed ancestor."""
+    mets = {
+        m["name"]: _fmt(totals[m["accumulatorId"]], m["metricType"])
+        for m in plan.get("metrics", [])
+        if m["accumulatorId"] in totals and any(k in m["name"] for k in _KEEP)
+        and m["metricType"] != "average"
+    }
+    if mets:
+        yield f"{'  ' * depth}{plan['nodeName'][:50]}  " + ", ".join(f"{k}={v}" for k, v in mets.items())
+    for child in plan.get("children", []):
+        yield from operator_lines(child, totals, depth + bool(mets))
+
+
+def enable_event_log(work: Path) -> None:
+    """Point the JVM that ``get_spark`` will launch at ``work/conf``, which
+    turns the event log on into ``work/eventlog``; ``get_spark`` itself is
+    unchanged."""
+    from perfbench.run import EVENT_LOG, LOG4J, SPARK_DEFAULTS
+
+    for d in (work / "conf", work / "eventlog"):
+        d.mkdir()
+    (work / "conf" / "spark-defaults.conf").write_text((SPARK_DEFAULTS + EVENT_LOG).format(work=work))
+    (work / "conf" / "log4j2.properties").write_text(LOG4J)
+    os.environ["SPARK_CONF_DIR"] = str(work / "conf")
 
 
 def main() -> None:
@@ -39,93 +113,62 @@ def main() -> None:
     ap.add_argument("--runs", type=int, default=2)
     args = ap.parse_args()
 
-    import os
-
-    from pyspark.sql import SparkSession
+    from _resolve import resolve_query
 
     from job_etl_spark.queries import registry
-    from job_etl_spark.session import _default_driver_mem
+    from job_etl_spark.session import get_spark
+    from perfbench import trace as tr
+    from perfbench.run import stop_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("jobspark-profile")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", os.environ.get("JOBSPARK_SHUFFLE_PARTITIONS", "32"))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("JOBSPARK_DRIVER_MEM") or _default_driver_mem())
-        .config("spark.ui.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    base = "http://localhost:4040/api/v1"
-    app_id = spark.sparkContext.applicationId
     reg = registry()
+    names = [resolve_query(reg, q) for q in args.queries]
+    with tempfile.TemporaryDirectory(prefix="jobspark-profile-") as work:
+        work = Path(work)
+        enable_event_log(work)
+        spark = get_spark("jobspark-profile")
+        sc = spark.sparkContext
+        windows: dict[str, tuple[float, float]] = {}
+        try:
+            reg["q01_pricing_summary"].fn(spark, args.sf).write.format("noop").mode("overwrite").save()
+            for name in names:
+                for k in range(args.runs):
+                    group = f"{name}#{k}"
+                    sc.setJobGroup(group, group)
+                    t0 = time.time() * 1000.0
+                    reg[name].fn(spark, args.sf).write.format("noop").mode("overwrite").save()
+                    windows[group] = (t0, time.time() * 1000.0)
+        finally:
+            stop_spark(spark)
+        logs = sorted((work / "eventlog").iterdir())
+        if len(logs) != 1:
+            raise SystemExit(f"expected one event log, found {[p.name for p in logs]}")
+        lines = logs[0].read_text().splitlines()
+    groups = tr.parse_event_log(lines)
+    execs, totals = sql_executions(lines)
 
-    # warmup (matches time_query.py)
-    reg["q01_pricing_summary"].fn(spark, args.sf).write.format("noop").mode("overwrite").save()
-
-    for prefix in args.queries:
-        from _resolve import resolve_query
-
-        name = resolve_query(reg, prefix)
-        best, best_marks = None, None
-        for _ in range(args.runs):
-            jobs_before = {j["jobId"] for j in _get(f"{base}/applications/{app_id}/jobs")}
-            t0 = time.perf_counter()
-            spark.sparkContext.setJobDescription(f"profile:{name}")
-            reg[name].fn(spark, args.sf).write.format("noop").mode("overwrite").save()
-            wall = time.perf_counter() - t0
-            spark.sparkContext.setJobDescription(None)
-            jobs = [
-                j
-                for j in _get(f"{base}/applications/{app_id}/jobs")
-                if j["jobId"] not in jobs_before
-            ]
-            if best is None or wall < best:
-                best, best_marks = wall, jobs
-        jobs = sorted(best_marks, key=lambda j: j["jobId"])
-        print(f"\n=== {name}: wall {best:.3f}s, {len(jobs)} jobs ===")
-        prev_end = None
-        job_sum = 0.0
-        for j in jobs:
-            st, en = _parse_ts(j["submissionTime"]), _parse_ts(j["completionTime"])
-            gap = (st - prev_end) if prev_end is not None else 0.0
-            prev_end = en
-            job_sum += en - st
-            print(
-                f"  job {j['jobId']}: {en - st:6.3f}s  gap_before {gap:6.3f}s  "
-                f"stages={len(j['stageIds'])} tasks={j['numTasks']}  {j.get('description','')[:60]}"
-            )
-        print(f"  sum(job wall) {job_sum:.3f}s; driver-side remainder {best - job_sum:.3f}s")
-        # stage detail for the longest jobs
-        stages = _get(f"{base}/applications/{app_id}/stages?status=complete")
-        sid_map = {s["stageId"]: s for s in stages}
-        for j in jobs:
-            for sid in sorted(j["stageIds"]):
-                s = sid_map.get(sid)
-                if not s:
-                    # listed in the job but never ran (AQE-skipped /
-                    # reused-exchange stages) — label instead of dur=-1
-                    print(f"    stage {sid}: skipped")
-                    continue
-                if s.get("completionTime") and s.get("firstTaskLaunchedTime"):
-                    dur = _parse_ts(s["completionTime"]) - _parse_ts(
-                        s["firstTaskLaunchedTime"]
-                    )
-                    dur_s = f"{dur:6.3f}s"
-                else:
-                    dur_s = "  (no tasks)"
-                print(
-                    f"    stage {sid}: {dur_s} tasks={s['numCompleteTasks']} "
-                    f"in={s['inputBytes']} sr={s['shuffleReadBytes']} sw={s['shuffleWriteBytes']} "
-                    f"{s['name'][:50]}"
-                )
-
-    spark.stop()
+    for name in names:
+        runs = [f"{name}#{k}" for k in range(args.runs)]
+        best = min(runs, key=lambda g: windows[g][1] - windows[g][0])
+        lo, hi = windows[best]
+        gs = groups.get(best, tr.GroupStats())
+        job_ms = tr.union_ms(tr.clip(gs.job_intervals, lo, hi))
+        walls = ", ".join(f"{(windows[g][1] - windows[g][0]) / 1000:.3f}" for g in runs)
+        print(f"\n=== {name}: best wall {(hi - lo) / 1000:.3f}s (runs {walls}) ===")
+        print(
+            f"  {gs.jobs} jobs, {gs.stages} stages, {gs.tasks} tasks; job time "
+            f"{job_ms / 1000:.3f}s, driver gap {(hi - lo - job_ms) / 1000:.3f}s"
+        )
+        print(
+            f"  input {gs.input_bytes / tr.MB:.2f} MB, shuffle read "
+            f"{gs.shuffle_read_bytes / tr.MB:.2f} MB, shuffle write "
+            f"{gs.shuffle_write_bytes / tr.MB:.2f} MB"
+        )
+        last = max((i for i, ex in execs.items() if ex["group"] == best), default=None)
+        if last is None:
+            continue
+        print(f"  last SQL execution {last} ({execs[last]['ms']} ms), per operator:")
+        for line in operator_lines(execs[last]["plan"], totals):
+            print(f"    {line}")
 
 
 if __name__ == "__main__":

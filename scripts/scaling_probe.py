@@ -149,7 +149,7 @@ def main() -> None:
     # above keys on documents.parquet, so a later --tables run against an
     # existing out_dir can silently leave its table base-linked — caught
     # in r7 when an embeddings probe printed all-zero exponents). Derive
-    # the scale from parquet footers, like pack_probe.
+    # the scale from parquet footers, not from the requested --scale.
     import pyarrow.parquet as _paq
 
     def _rows(d: str, t: str) -> int:

@@ -24,6 +24,7 @@ _TIER_BY_FILE = {
     "test_tables_layouts.py": "smoke",
     "test_readers_sql.py": "smoke",
     "test_store_crash.py": "smoke",
+    "test_scripts.py": "smoke",
     "test_notifier.py": "smoke",
     "test_asof.py": "smoke",
     "test_expectations.py": "smoke",
