@@ -14,6 +14,9 @@ Scale notes (100 TB):
   sort-merge join). AQE handles skewed keys.
 - The updates side is usually a small daily delta → Spark auto-broadcasts
   it under the threshold; no collect, no driver materialization.
+- Merge-on-read tables defer the merge to read time:
+  :func:`merge_statements` folds a stack of upsert statements in one
+  window pass over the delta rows and merges it without shuffling the base.
 """
 
 from __future__ import annotations
@@ -22,6 +25,23 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# The J3 column classes, in the order a class spec lists them.
+COLUMN_CLASSES = ("overwrite", "coalesce", "keep_first")
+
+
+def normalize_policy(policy: dict) -> dict[str, list[str]]:
+    """A ``{class: [columns]}`` spec with every class of
+    :data:`COLUMN_CLASSES` present, in that order. Raises on an unknown
+    class or a column listed under two classes."""
+    unknown = set(policy) - set(COLUMN_CLASSES)
+    if unknown:
+        raise ValueError(f"unknown class(es): {sorted(unknown)}")
+    spec = {k: list(policy.get(k, ())) for k in COLUMN_CLASSES}
+    named = [c for cs in spec.values() for c in cs]
+    if len(named) != len(set(named)):
+        raise ValueError("a column may appear in only one class")
+    return spec
 
 
 def merge_upsert(
@@ -74,153 +94,6 @@ def merge_upsert(
     return joined.select(*out)
 
 
-def merge_upsert_onto(
-    base: DataFrame,
-    updates: DataFrame,
-    keys: Sequence[str],
-    overwrite_cols: Sequence[str] = (),
-    coalesce_cols: Sequence[str] | None = None,
-    keep_first_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Result-identical to :func:`merge_upsert`, different physical shape:
-    the base is never shuffled.
-
-    ``merge_upsert``'s full-outer join cannot use a broadcast hash join
-    (Spark builds hash tables for one side only; FULL OUTER needs both),
-    so at 100 TB the read pays a full shuffle of the base. Here the merge
-    decomposes into three broadcast-able pieces (updates ≪ base is the
-    merge-on-read invariant):
-
-      matched+survivors = base ⟕ broadcast(updates)   — one base scan,
-          per-column class expressions; unmatched base rows fall out of
-          the same projection (the when(matched) branches)
-      matched_keys      = base ⋉ broadcast(update keys) — key-column-only
-          second scan (parquet reads just the key pages)
-      inserts           = updates ∖ matched_keys        — small × small
-
-    Used by ``TableStore.mor_read`` for policy tables; parity with
-    ``merge_upsert`` is pinned by randomized tests (test_merge_mor.py).
-    """
-    keys = list(keys)
-    all_cols = base.columns
-    classified = set(keys) | set(overwrite_cols) | set(keep_first_cols)
-    if coalesce_cols is None:
-        coalesce_cols = [c for c in all_cols if c not in classified and c in updates.columns]
-    base_types = dict(base.dtypes)
-
-    b = base.alias("b")
-    u = updates.alias("u")
-    joined = b.join(
-        F.broadcast(u), [F.col(f"b.{k}") == F.col(f"u.{k}") for k in keys], "left"
-    )
-    # a null-keyed base row never equality-matches (same as the full-outer)
-    matched = F.col(f"u.{keys[0]}").isNotNull() & F.col(f"b.{keys[0]}").isNotNull()
-    out = [F.col(f"b.{k}").alias(k) for k in keys]
-    for c in all_cols:
-        if c in keys:
-            continue
-        bcol = F.col(f"b.{c}")
-        ucol = F.col(f"u.{c}") if c in updates.columns else F.lit(None)
-        if c in keep_first_cols:
-            expr = F.coalesce(bcol, ucol)
-        elif c in overwrite_cols:
-            expr = F.when(matched, ucol).otherwise(bcol)
-        elif c in coalesce_cols:
-            expr = F.coalesce(ucol, bcol)
-        else:
-            expr = F.coalesce(bcol, ucol)
-        out.append(expr.alias(c))
-    updated = joined.select(*out)
-
-    # pure inserts: update keys absent from the base. A small-left vs
-    # huge-right anti join would shuffle the base, so invert it: semi-join
-    # the base against the broadcast key set (key columns only — column
-    # pruning keeps the scan cheap), then anti-join small × small. For an
-    # unmatched update row every column class reduces to "take the update
-    # value" (coalesce/when against an all-null base row).
-    matched_keys = base.select(*keys).join(
-        F.broadcast(updates.select(*keys)), keys, "left_semi"
-    )
-    inserts = updates.join(matched_keys, keys, "left_anti").select(
-        *[
-            (F.col(c) if c in updates.columns else F.lit(None).cast(base_types[c])).alias(c)
-            for c in all_cols
-        ]
-    )
-    return updated.unionByName(inserts)
-
-
-def fold_upsert_batches(
-    batches: DataFrame,
-    keys: Sequence[str],
-    overwrite_cols: Sequence[str] = (),
-    coalesce_cols: Sequence[str] = (),
-    seq_col: str = "_seq",
-    deleted_col: str = "_deleted",
-) -> tuple[DataFrame, DataFrame]:
-    """Fold a stack of upsert batches into ONE equivalent updates frame.
-
-    ``batches`` is the union of delta batches, each row tagged with its
-    batch sequence ``seq_col`` (at most one row per key per batch — the
-    merge-on-read delta contract). The COALESCE-merge is associative:
-    applying :func:`merge_upsert` batch-by-batch equals applying it once
-    with the per-key fold
-
-      overwrite  → the latest batch's value outright (nulls included)
-      coalesce   → first non-null scanning latest → oldest
-      everything else (keep-first + unclassified) → first non-null
-                   scanning oldest → latest
-
-    so a merge-on-read view costs one window over the DELTA rows (≪ base)
-    plus a single base merge — never a per-delta join chain. Tombstones:
-    rows at/before a key's latest ``deleted_col`` marker are dead history,
-    and so is the key's BASE row — a sequential COW chain would have
-    deleted it before any revive batch arrived. Every key with ANY
-    tombstone is therefore returned in ``reset_keys`` for the caller to
-    anti-join the base on: a key whose latest row is a tombstone then
-    simply vanishes (no folded row), while a revived key re-inserts fresh
-    from the folded frame with no pre-delete base values leaking in.
-
-    Returns ``(folded_updates, reset_keys)``.
-    """
-    keys = list(keys)
-    if deleted_col not in batches.columns:
-        batches = batches.withColumn(deleted_col, F.lit(False))
-    batches = batches.withColumn(
-        deleted_col, F.coalesce(F.col(deleted_col), F.lit(False))
-    )
-    pk = Window.partitionBy(*keys)
-    tomb = F.max(F.when(F.col(deleted_col), F.col(seq_col))).over(pk)
-    live = batches.withColumn("_tomb", tomb).where(
-        (~F.col(deleted_col))
-        & (F.col("_tomb").isNull() | (F.col(seq_col) > F.col("_tomb")))
-    )
-    desc = pk.orderBy(F.desc(seq_col)).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    asc = pk.orderBy(F.asc(seq_col)).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    data_cols = [
-        c for c in batches.columns if c not in keys and c not in (seq_col, deleted_col, "_tomb")
-    ]
-    folded = live
-    for c in data_cols:
-        if c in overwrite_cols:
-            folded = folded.withColumn(c, F.first(c, ignorenulls=False).over(desc))
-        elif c in coalesce_cols:
-            folded = folded.withColumn(c, F.first(c, ignorenulls=True).over(desc))
-        else:
-            folded = folded.withColumn(c, F.first(c, ignorenulls=True).over(asc))
-    folded = (
-        folded.withColumn("_rn", F.row_number().over(pk.orderBy(F.desc(seq_col))))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_tomb", seq_col, deleted_col)
-    )
-    reset_keys = batches.where(F.col(deleted_col)).select(*keys).distinct()
-    return folded, reset_keys
-
-
 def insert_if_absent(base: DataFrame, new_rows: DataFrame, keys: Sequence[str]) -> DataFrame:
     """``INSERT … ON CONFLICT DO NOTHING`` (J4): anti-join then append.
     Intra-batch duplicates are also suppressed (the reference's per-row
@@ -249,187 +122,167 @@ def insert_if_absent(base: DataFrame, new_rows: DataFrame, keys: Sequence[str]) 
     return base.unionByName(fresh.select(*base.columns))
 
 
-def fold_upsert_statements(
+def merge_statements(
+    base: DataFrame,
     batches: DataFrame,
     keys: Sequence[str],
-    column_classes: dict[str, dict[int, str]],
-    seq_col: str = "_seq",
-    deleted_col: str = "_deleted",
-) -> tuple[DataFrame, DataFrame]:
-    """Fold a delta stack whose batches carry PER-STATEMENT column classes
-    (the generalization of :func:`fold_upsert_batches`, which requires one
-    table-wide policy).
+    classes: dict[int, dict[str, str]],
+) -> DataFrame:
+    """Apply a stack of upsert statements to ``base`` in one plan, with the
+    result of applying each as its own :func:`merge_upsert` in ``_seq``
+    order (a row whose ``_deleted`` flag is true deletes its key instead).
 
-    Why this exists: the staging table's normalize statements are
-    keep-first on the enricher-owned columns (re-normalize must not reset
-    enrichment), but an ENRICHER statement must overwrite those same
-    columns — so one table accumulates deltas with different per-column
-    classes (reference: the normalizer's ON CONFLICT column list vs the
-    enricher's keyed UPDATE, services/normalizer/db_operations.py:427-460
-    and services/enricher/db_operations.py:140-176).
+    ``batches`` is the union of the statements' rows, each tagged with its
+    statement's ``_seq`` — at most one row per key per statement (the
+    merge-on-read delta contract) — and null in every column its statement
+    does not carry. ``classes[seq]`` maps each data column a statement
+    carries to its class; every statement has an entry (``{}`` if it
+    carries none). Classes vary per statement because an enricher's keyed
+    UPDATE overwrites columns the normalize statements keep-first
+    (reference: services/normalizer/db_operations.py:427-460 vs
+    services/enricher/db_operations.py:140-176).
 
-    ``column_classes[c]`` maps a batch's ``seq`` to the class
-    (``'overwrite' | 'coalesce' | 'keep_first'``) that batch applies to
-    column ``c``; a seq absent from the map means the statement does not
-    carry ``c`` at all (a no-op on that column — its rows are excluded
-    from the fold, null or not).
-
-    The fold stays ONE window pass because the three per-batch merge
-    functions close under composition:
+    The fold is one window pass over the delta rows because the per-
+    statement merge functions close under composition:
 
       overwrite(v)  = const(v)                (ignores prior state)
       coalesce(v)   = s -> coalesce(v, s)     (fill-left)
       keep_first(v) = s -> coalesce(s, v)     (fill-right)
 
-    Any composition reduces to ``s -> coalesce(PRE, s, POST)`` or, once an
-    overwrite appears, to ``const(coalesce(PRE', K, POST'))`` where K is
-    the LATEST overwrite's value and PRE'/POST' aggregate only the
-    fill-left/fill-right batches AFTER it:
+    Any composition is ``s -> coalesce(PRE, s, POST)`` or, once an
+    overwrite appears, ``const(coalesce(PRE', K, POST'))`` with K the
+    LATEST overwrite's value and PRE'/POST' over the statements after it:
 
       PRE  = first non-null fill-left value scanning latest -> oldest
       POST = first non-null fill-right value scanning oldest -> latest
 
-    so the folded frame encodes each column as three fields —
-    ``c__pre = coalesce(PRE, K)``, ``c__post = POST``, and
-    ``c__skipbase = (an overwrite batch exists)`` — which
-    :func:`merge_statements_onto` resolves against the base as
-    ``when(skipbase, coalesce(pre, post))
-       .otherwise(coalesce(pre, base, post))``.
+    A column whose statements all share one class folds to one value (the
+    latest row's, for an overwrite column every statement carries), merged
+    with that class's expression. Any other column folds to ``__pre =
+    coalesce(PRE, K)``, ``__post = POST`` and ``__skipbase`` (K exists),
+    merged as ``coalesce(pre, post)`` if skipbase, else
+    ``coalesce(pre, base, post)``. All windows share one partitioning and
+    two orders, so the Window operator count does not grow with width.
 
-    Tombstones reset exactly as in :func:`fold_upsert_batches`: rows
-    at/before a key's latest tombstone are dead history and every key with
-    ANY tombstone is returned in ``reset_keys`` for the caller to
-    anti-join the base on.
+    Tombstones: rows at or before a key's latest tombstone are dead
+    history, and so is its BASE row (a sequential chain deleted it before
+    any revive arrived), so the base is anti-joined on every key with a
+    tombstone: a deleted key vanishes, a revived one inserts fresh.
 
-    Returns ``(framed, reset_keys)`` — ``framed`` has the key columns plus
-    the three ``__pre/__post/__skipbase`` fields per folded column.
+    The base is never shuffled (``merge_upsert``'s full-outer join cannot
+    broadcast; deltas ≪ base is the merge-on-read invariant):
+
+      matched+survivors = base ⟕ broadcast(folded)       one base scan
+      matched_keys      = base ⋉ broadcast(folded keys)  key columns only
+      inserts           = folded ∖ matched_keys          small × small
     """
     keys = list(keys)
-    if deleted_col not in batches.columns:
-        batches = batches.withColumn(deleted_col, F.lit(False))
-    batches = batches.withColumn(
-        deleted_col, F.coalesce(F.col(deleted_col), F.lit(False))
-    )
-    pk = Window.partitionBy(*keys)
-    tomb = F.max(F.when(F.col(deleted_col), F.col(seq_col))).over(pk)
-    live = batches.withColumn("_tomb", tomb).where(
-        (~F.col(deleted_col))
-        & (F.col("_tomb").isNull() | (F.col(seq_col) > F.col("_tomb")))
-    )
-    desc = pk.orderBy(F.desc(seq_col)).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    asc = pk.orderBy(F.asc(seq_col)).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    seq = F.col(seq_col)
-
-    def _seqs(cmap: dict[int, str], cls: str) -> list[int]:
-        return sorted(s for s, c in cmap.items() if c == cls)
-
-    framed = live
-    out_cols: list[str] = []
-    for c, cmap in sorted(column_classes.items()):
-        ow, co, kf = (_seqs(cmap, x) for x in ("overwrite", "coalesce", "keep_first"))
-        bad = set(cmap.values()) - {"overwrite", "coalesce", "keep_first"}
-        if bad:
-            raise ValueError(f"unknown column class(es) {bad} for {c!r}")
-        # latest overwrite, wrapped in a struct so "overwrite with null
-        # value" stays distinguishable from "no overwrite batch"
-        if ow:
-            k_struct = F.first(
-                F.when(seq.isin(ow), F.struct(F.col(c).alias("v"))), ignorenulls=True
-            ).over(desc)
-        else:
-            k_struct = F.lit(None).cast(f"struct<v:{dict(batches.dtypes)[c]}>")
-        j = F.max(F.when(seq.isin(ow), seq)).over(pk) if ow else F.lit(None)
-        after_j = seq > F.coalesce(j, F.lit(-(2**31)))
-        pre_fill = (
-            F.first(F.when(seq.isin(co) & after_j, F.col(c)), ignorenulls=True).over(desc)
-            if co
-            else F.lit(None)
-        )
-        post_fill = (
-            F.first(F.when(seq.isin(kf) & after_j, F.col(c)), ignorenulls=True).over(asc)
-            if kf
-            else F.lit(None)
-        )
-        framed = framed.withColumns(
-            {
-                f"{c}__pre": F.coalesce(pre_fill, k_struct["v"]),
-                f"{c}__post": post_fill.cast(dict(batches.dtypes)[c]),
-                f"{c}__skipbase": k_struct.isNotNull(),
-            }
-        )
-        out_cols += [f"{c}__pre", f"{c}__post", f"{c}__skipbase"]
-    framed = (
-        framed.withColumn("_rn", F.row_number().over(pk.orderBy(F.desc(seq_col))))
-        .where(F.col("_rn") == 1)
-        .select(*keys, *out_cols)
-    )
-    reset_keys = batches.where(F.col(deleted_col)).select(*keys).distinct()
-    return framed, reset_keys
-
-
-def merge_statements_onto(
-    base: DataFrame, framed: DataFrame, keys: Sequence[str]
-) -> DataFrame:
-    """Resolve a :func:`fold_upsert_statements` frame against the base —
-    the per-statement twin of :func:`merge_upsert_onto`, same broadcast
-    shape (the base is never shuffled): left join + key-semi + anti.
-
-    Base columns with no ``__pre`` triple pass through untouched (no
-    statement ever carried them); inserts take ``coalesce(pre, post)`` and
-    null-fill the untouched columns."""
-    keys = list(keys)
+    seqs = sorted(classes)
+    by_col: dict[str, dict[int, str]] = {}
+    for s in seqs:
+        for c, cls in classes[s].items():
+            if cls not in COLUMN_CLASSES:
+                raise ValueError(f"unknown column class {cls!r} for {c!r}")
+            by_col.setdefault(c, {})[s] = cls
     base_types = dict(base.dtypes)
-    folded_cols = [c for c in base.columns if f"{c}__pre" in framed.columns]
-    extra = [
-        c[: -len("__pre")]
-        for c in framed.columns
-        if c.endswith("__pre") and c[: -len("__pre")] not in base.columns
-    ]
+    extra = set(by_col) - set(base_types)
     if extra:
         raise ValueError(f"statement columns not in base schema: {sorted(extra)}")
+    # an uncarried statement's null is a no-op for a fill class but would
+    # read as a null overwrite, so a partly carried overwrite column is mixed
+    simple: dict[str, str] = {}
+    for c, cmap in by_col.items():
+        kinds = set(cmap.values())
+        if len(kinds) == 1 and (kinds != {"overwrite"} or len(cmap) == len(seqs)):
+            simple[c] = kinds.pop()
+    mixed = {c: cmap for c, cmap in by_col.items() if c not in simple}
 
-    b = base.alias("b")
-    u = framed.alias("u")
-    joined = b.join(
-        F.broadcast(u), [F.col(f"b.{k}") == F.col(f"u.{k}") for k in keys], "left"
+    seq = F.col("_seq")
+    if "_deleted" in batches.columns:
+        dead = F.coalesce(F.col("_deleted"), F.lit(False))
+    else:
+        dead = F.lit(False)
+    pk = Window.partitionBy(*keys)
+    desc = pk.orderBy(F.desc("_seq")).rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
     )
-    matched = F.col(f"u.{keys[0]}").isNotNull() & F.col(f"b.{keys[0]}").isNotNull()
-    out = [F.col(f"b.{k}").alias(k) for k in keys]
-    for c in base.columns:
-        if c in keys:
-            continue
-        bcol = F.col(f"b.{c}")
-        if c not in folded_cols:
-            out.append(bcol.alias(c))
-            continue
-        pre, post, skip = (
-            F.col(f"u.{c}__pre"),
-            F.col(f"u.{c}__post"),
-            F.col(f"u.{c}__skipbase"),
-        )
-        merged_val = F.when(skip, F.coalesce(pre, post)).otherwise(
-            F.coalesce(pre, bcol, post)
-        )
-        out.append(F.when(matched, merged_val).otherwise(bcol).alias(c))
-    updated = joined.select(*out)
+    asc = pk.orderBy(F.asc("_seq")).rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
 
-    matched_keys = base.select(*keys).join(
-        F.broadcast(framed.select(*keys)), keys, "left_semi"
+    def of(cmap: dict[int, str], cls: str) -> list[int]:
+        return [s for s, k in cmap.items() if k == cls]
+
+    # the latest overwrite seq of each column that mixes overwrite with a
+    # fill class, taken over the whole stack: one at or before the key's
+    # tombstone precedes every live row, so it filters nothing
+    last_ow = {
+        c: F.max(F.when(seq.isin(of(cmap, "overwrite")), seq)).over(pk).alias(f"{c}__last_ow")
+        for c, cmap in mixed.items()
+        if of(cmap, "overwrite") and len(set(cmap.values())) > 1
+    }
+    live = batches.select(
+        "*", F.max(F.when(dead, seq)).over(pk).alias("_tomb"), *last_ow.values()
+    ).where(~dead & (F.col("_tomb").isNull() | (seq > F.col("_tomb"))))
+
+    types = dict(batches.dtypes)
+    fields = []
+    for c in by_col:
+        v = F.col(c)
+        if c in simple:
+            w = asc if simple[c] == "keep_first" else desc
+            fields.append(v if simple[c] == "overwrite" else F.first(v, True).over(w).alias(c))
+            continue
+        ow, co, kf = (of(mixed[c], k) for k in COLUMN_CLASSES)
+        null = F.lit(None).cast(types[c])
+        j = F.col(f"{c}__last_ow")
+        fresh = j.isNull() | (seq > j) if c in last_ow else True
+        pre = F.first(F.when(seq.isin(co) & fresh, v), True).over(desc) if co else null
+        post = F.first(F.when(seq.isin(kf) & fresh, v), True).over(asc) if kf else null
+        skip = F.lit(False)
+        if ow:
+            # a struct keeps "overwrite with null" apart from "no overwrite"
+            k = F.first(F.when(seq.isin(ow), F.struct(v.alias("v"))), True).over(desc)
+            pre, skip = F.coalesce(pre, k["v"]), k.isNotNull()
+        fields += [pre.alias(f"{c}__pre"), post.alias(f"{c}__post"), skip.alias(f"{c}__skipbase")]
+    folded = (
+        live.select(*keys, *fields, F.row_number().over(pk.orderBy(F.desc("_seq"))).alias("_rn"))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
     )
-    inserts = framed.join(matched_keys, keys, "left_anti").select(
-        *keys,
-        *[
-            (
-                F.coalesce(F.col(f"{c}__pre"), F.col(f"{c}__post"))
-                if c in folded_cols
-                else F.lit(None).cast(base_types[c])
-            ).alias(c)
-            for c in base.columns
-            if c not in keys
-        ],
+
+    reset = batches.where(dead).select(*keys).distinct()
+    survivors = base.join(F.broadcast(reset), keys, "left_anti")
+    joined = survivors.alias("b").join(
+        F.broadcast(folded.alias("u")), [F.col(f"b.{k}") == F.col(f"u.{k}") for k in keys], "left"
     )
-    return updated.unionByName(inserts.select(*base.columns))
+    matched = F.col(f"u.{keys[0]}").isNotNull()
+
+    def merged(c: str):
+        b, v = F.col(f"b.{c}"), F.col(f"u.{c}")
+        if c in mixed:
+            pre, post, skip = (F.col(f"u.{c}__{x}") for x in ("pre", "post", "skipbase"))
+            # an unmatched row has a null skipbase and takes the base value
+            return F.when(skip, F.coalesce(pre, post)).otherwise(F.coalesce(pre, b, post))
+        cls = simple.get(c)
+        if cls == "overwrite":
+            return F.when(matched, v).otherwise(b)
+        if cls == "coalesce":
+            return F.coalesce(v, b)
+        return F.coalesce(b, v) if cls == "keep_first" else b
+
+    def inserted(c: str):
+        if c in mixed:
+            return F.coalesce(F.col(f"{c}__pre"), F.col(f"{c}__post"))
+        return F.col(c) if c in simple else F.lit(None).cast(base_types[c])
+
+    data_cols = [c for c in base_types if c not in keys]
+    matched_keys = survivors.select(*keys).join(
+        F.broadcast(folded.select(*keys)), keys, "left_semi"
+    )
+    inserts = folded.join(matched_keys, keys, "left_anti").select(
+        *keys, *[inserted(c).alias(c) for c in data_cols]
+    )
+    return joined.select(
+        *[F.col(f"b.{k}").alias(k) for k in keys], *[merged(c).alias(c) for c in data_cols]
+    ).unionByName(inserts)

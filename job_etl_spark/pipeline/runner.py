@@ -140,7 +140,7 @@ def run_enrich(
     keep-first for normalize statements, so the delta's _CLASSES sidecar
     overrides them for this statement only. Write cost O(pending), never
     O(table); the read folds mixed normalize/enrich statements through
-    ``fold_upsert_statements`` bit-identically to the COW chain."""
+    ``merge_statements`` bit-identically to the COW chain."""
     run_ts = run_ts or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     # a dry run must not mutate ANYTHING, the layout included
     if mor and not dry_run:

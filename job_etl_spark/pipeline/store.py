@@ -16,6 +16,8 @@ from contextlib import ExitStack, contextmanager
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from job_etl_spark.operators.merge import merge_statements, normalize_policy
+
 # A swap parks the live dir under this prefix + its own name, in the same
 # parent. The dot hides the backup from Spark's file listing and from
 # ``sources.readers.register_views``.
@@ -446,11 +448,7 @@ class TableStore:
             "schema": df.schema.json(),
         }
         if policy is not None:
-            meta["policy"] = {
-                "overwrite": list(policy.get("overwrite", ())),
-                "coalesce": list(policy.get("coalesce", ())),
-                "keep_first": list(policy.get("keep_first", ())),
-            }
+            meta["policy"] = normalize_policy(policy)
         if buckets:
             if "_bucket" in df.columns:
                 raise ValueError("'_bucket' is reserved for the bucketed MOR layout")
@@ -487,20 +485,14 @@ class TableStore:
         with self._mor_writer_lock(name):
             meta = self._mor_meta(name)
             if meta.get("policy") is not None:
-                if meta["policy"] == {
-                    k: list(policy.get(k, ())) for k in ("overwrite", "coalesce", "keep_first")
-                }:
+                if meta["policy"] == normalize_policy(policy):
                     return
                 raise ValueError(
                     f"MOR table {name!r} already has a different policy; "
                     "reinterpreting landed deltas is not supported"
                 )
             self._mor_compact_locked(name)
-            meta["policy"] = {
-                "overwrite": list(policy.get("overwrite", ())),
-                "coalesce": list(policy.get("coalesce", ())),
-                "keep_first": list(policy.get("keep_first", ())),
-            }
+            meta["policy"] = normalize_policy(policy)
             _write_atomic(self._mor_dir(name, "_META"), json.dumps(meta))
 
     def mor_deltas(self, name: str) -> list[int]:
@@ -553,12 +545,7 @@ class TableStore:
                     f"mor_upsert({name!r}): per-statement classes require a "
                     "policy table (latest-wins deltas replace rows wholesale)"
                 )
-            good = {"overwrite", "coalesce", "keep_first"}
-            if set(classes) - good:
-                raise ValueError(f"unknown class(es): {sorted(set(classes) - good)}")
-            named = [c for k in good for c in classes.get(k, ())]
-            if len(named) != len(set(named)):
-                raise ValueError("a column may appear in only one class")
+            named = [c for cs in normalize_policy(classes).values() for c in cs]
             missing = set(named) - set(df.columns)
             if missing:
                 raise ValueError(f"classes name columns absent from the batch: {sorted(missing)}")
@@ -631,22 +618,13 @@ class TableStore:
         rows only (≪ base); the base is filtered by a left-anti join on
         the delta key set — broadcast-able whenever deltas are batch-sized.
 
-        Policy tables: the delta stack folds into one equivalent updates
-        frame (``fold_upsert_batches`` — the COALESCE-merge is
-        associative, so one window over the delta rows replaces a
-        per-delta join chain), then merges onto the base through
-        ``merge_upsert_onto`` — the broadcast-shaped twin of the COW
-        path's ``merge_upsert``, so the read is bit-identical to having
-        applied each batch as a COW merge, without ever shuffling the
-        base.
-
-        Mixed statements: when any delta carries a per-statement class
-        override (``mor_upsert(classes=...)``) or a partial column set,
-        the read dispatches to ``fold_upsert_statements`` /
-        ``merge_statements_onto`` — still one window pass over the delta
-        rows and one broadcast-shaped base merge, but with the
-        (column, statement)-level class resolution the enricher's keyed
-        UPDATE needs against the normalize policy."""
+        Policy tables: every delta is a statement whose carried columns
+        take the table policy's classes, or its own
+        (``mor_upsert(classes=...)``). ``merge_statements`` folds the stack
+        in one window pass over the delta rows and merges it onto the base
+        in a broadcast-shaped plan, bit-identical to applying each
+        statement as a COW ``merge_upsert``, without ever shuffling the
+        base."""
         meta = self._mor_meta(name)
         base = self._mor_read_base(name, meta)
         if meta.get("buckets"):
@@ -663,9 +641,12 @@ class TableStore:
         # The memo key is exact: the delta-seq tuple changes on every
         # upsert, the base stamp on every swap/compaction, so a hit can
         # only serve a view bit-identical to a fresh fold. The value is a
-        # LAZY localCheckpoint: first consumer materializes, later ones
-        # read the blocks. Intra-TableStore only (runner builds one store
-        # per run) — nothing persists across runs. At cluster scale the
+        # localCheckpoint(eager=False). On Spark 4 with AQE on that call
+        # is not lazy: it runs the fold's shuffles and broadcasts as jobs
+        # (6 for a one-delta policy table), so a reader that only filters
+        # or counts still pays for them. Later consumers read the
+        # checkpointed blocks. Intra-TableStore only (runner builds one
+        # store per run) — nothing persists across runs. At cluster scale the
         # same seam is a durable checkpoint / persist(DISK) decision.
         try:
             base_stamp = os.stat(self._mor_dir(name, "base")).st_mtime_ns
@@ -711,56 +692,20 @@ class TableStore:
                 d, allowMissingColumns=True
             )
         if policy is not None:
-            from job_etl_spark.operators.merge import (
-                fold_upsert_batches,
-                fold_upsert_statements,
-                merge_statements_onto,
-                merge_upsert_onto,
-            )
+            # a carried column takes the statement's class, else the
+            # policy's, else keep-first
+            def by_column(spec: dict) -> dict[str, str]:
+                return {c: k for k, cs in normalize_policy(spec).items() for c in cs}
 
-            base_data_cols = [c for c in base.columns if c not in keys]
-            uniform = not overrides and all(
-                set(cs) == set(base_data_cols) for cs in carried.values()
-            )
-            if not uniform:
-                # mixed statements (per-statement classes and/or partial
-                # column sets — e.g. enricher deltas interleaved with
-                # normalize deltas): the generalized one-pass fold
-                def _cls(c: str, s: int) -> str:
-                    ov = overrides.get(s, {})
-                    for k in ("overwrite", "coalesce", "keep_first"):
-                        if c in ov.get(k, ()):
-                            return k
-                    for k in ("overwrite", "coalesce", "keep_first"):
-                        if c in policy.get(k, ()):
-                            return k
-                    return "keep_first"  # the unclassified default
-
-                column_classes = {
-                    c: {s: _cls(c, s) for s in seqs if c in carried[s]}
-                    for c in base_data_cols
-                    if any(c in carried[s] for s in seqs)
+            table, base_cols, classes = by_column(policy), set(base.columns), {}
+            for s in seqs:
+                own = by_column(overrides.get(s, {}))
+                classes[s] = {
+                    c: own.get(c, table.get(c, "keep_first"))
+                    for c in carried[s]
+                    if c in base_cols
                 }
-                framed, reset = fold_upsert_statements(deltas, keys, column_classes)
-                survivors = base.join(F.broadcast(reset), list(keys), "left_anti")
-                return merge_statements_onto(survivors, framed, keys)
-
-            # anti-join on RESET keys (any tombstone in the stack), not just
-            # latest-tombstone keys: a delete-then-revive must insert fresh
-            # from the folded frame, never coalesce pre-delete base values
-            # into the revived row (the sequential-COW contract).
-            folded, reset = fold_upsert_batches(
-                deltas, keys, policy["overwrite"], policy["coalesce"]
-            )
-            survivors = base.join(F.broadcast(reset), list(keys), "left_anti")
-            return merge_upsert_onto(
-                survivors,
-                folded,
-                keys,
-                overwrite_cols=policy["overwrite"],
-                coalesce_cols=policy["coalesce"],
-                keep_first_cols=policy["keep_first"],
-            )
+            return merge_statements(base, deltas, keys, classes)
         w = Window.partitionBy(*keys).orderBy(F.desc("_seq"))
         latest = (
             deltas.withColumn("_rn", F.row_number().over(w))

@@ -15,7 +15,7 @@ for between-round confidence sweeps:
   7. seniority cascade: native expr == Spark-SQL CASE == DuckDB CASE
      (dialect-sensitive escaping, L-level/roman collisions, metachars,
      unicode, ANSI cast-overflow titles)
-  8. merge-on-read delta fold (uniform + per-statement classes, flat +
+  8. merge-on-read delta fold (table policy + per-statement classes, flat +
      bucketed store layouts, compaction) == sequential COW merge chain
      (random policies, tombstones, revives, partial columns, empty
      batches)
@@ -409,9 +409,9 @@ def fuzz_seniority_render(spark, rng: random.Random, n: int) -> int:
 
 
 def fuzz_mor_fold(spark, rng: random.Random, rounds: int) -> int:
-    """Family #8 (r9 verdict #5): the merge-on-read delta fold — uniform
-    policy fold (``fold_upsert_batches``) AND the per-statement
-    generalization (``fold_upsert_statements``) — must be bit-identical to
+    """Family #8 (r9 verdict #5): the merge-on-read delta fold
+    (``merge_statements``), under the table policy alone and with
+    per-statement class overrides, must be bit-identical to
     applying every batch as its own sequential COW ``merge_upsert``, for
     random policies (column classes drawn per corpus), random delta stacks
     (nulls everywhere, tombstones, re-inserts after tombstones of
@@ -426,13 +426,7 @@ def fuzz_mor_fold(spark, rng: random.Random, rounds: int) -> int:
 
     from pyspark.sql import functions as F
 
-    from job_etl_spark.operators.merge import (
-        fold_upsert_batches,
-        fold_upsert_statements,
-        merge_statements_onto,
-        merge_upsert,
-        merge_upsert_onto,
-    )
+    from job_etl_spark.operators.merge import merge_statements, merge_upsert
     from job_etl_spark.pipeline.runner import TableStore
 
     COLS = ["c0", "c1", "c2", "c3"]
@@ -532,7 +526,7 @@ def fuzz_mor_fold(spark, rng: random.Random, rounds: int) -> int:
         want = canon(cow)
 
         # ---- fold path (algebra only, no files) -------------------------
-        stack, col_classes, any_override = None, {}, False
+        stack, stmt_classes, any_override = None, {}, False
         for s, (rows, carried, stmt_cls) in enumerate(batches, start=1):
             drows = []
             for k, v in rows:
@@ -546,28 +540,9 @@ def fuzz_mor_fold(spark, rng: random.Random, rounds: int) -> int:
             stack = d if stack is None else stack.unionByName(d)
             cls = stmt_cls or table_cls
             any_override = any_override or stmt_cls is not None
-            for c in carried:
-                col_classes.setdefault(c, {})[s] = cls[c]
+            stmt_classes[s] = {c: cls[c] for c in carried}
         if stack is not None:
-            if any_override:
-                framed, reset = fold_upsert_statements(stack, ["k"], col_classes)
-                survivors = base.join(F.broadcast(reset), ["k"], "left_anti")
-                got = canon(merge_statements_onto(survivors, framed, ["k"]))
-            else:
-                folded, reset = fold_upsert_batches(
-                    stack, ["k"], policy["overwrite"], policy["coalesce"]
-                )
-                survivors = base.join(F.broadcast(reset), ["k"], "left_anti")
-                got = canon(
-                    merge_upsert_onto(
-                        survivors,
-                        folded,
-                        ["k"],
-                        overwrite_cols=policy["overwrite"],
-                        coalesce_cols=policy["coalesce"],
-                        keep_first_cols=policy["keep_first"],
-                    )
-                )
+            got = canon(merge_statements(base, stack, ["k"], stmt_classes))
         else:
             got = canon(base)
         if got != want:
@@ -625,7 +600,7 @@ def fuzz_mor_fold(spark, rng: random.Random, rounds: int) -> int:
 
 def fuzz_statement_oracle(spark, rng: random.Random, rounds: int) -> int:
     """Family #9 (r10 verdict #6): the per-statement fold
-    (``fold_upsert_statements`` + ``merge_statements_onto``) against a
+    (``merge_statements``) against a
     PURE-PYTHON sequential oracle — independent of ``merge_upsert``, so a
     bug shared by the COW merge and the fold (family #8 compares those
     two against each other) cannot hide. The oracle applies each
@@ -643,10 +618,7 @@ def fuzz_statement_oracle(spark, rng: random.Random, rounds: int) -> int:
 
     from pyspark.sql import functions as F
 
-    from job_etl_spark.operators.merge import (
-        fold_upsert_statements,
-        merge_statements_onto,
-    )
+    from job_etl_spark.operators.merge import merge_statements
     from job_etl_spark.pipeline.runner import TableStore
 
     COLS = ["c0", "c1", "c2", "c3"]
@@ -752,7 +724,7 @@ def fuzz_statement_oracle(spark, rng: random.Random, rounds: int) -> int:
         )
 
         # ---- one-pass statement fold ------------------------------------
-        stack, col_classes = None, {}
+        stack, stmt_classes = None, {}
         for s, (rows, carried, stmt_cls) in enumerate(batches, start=1):
             drows = []
             for k, v in rows:
@@ -765,12 +737,9 @@ def fuzz_statement_oracle(spark, rng: random.Random, rounds: int) -> int:
             )
             stack = d if stack is None else stack.unionByName(d)
             cls = stmt_cls or table_cls
-            for c in carried:
-                col_classes.setdefault(c, {})[s] = cls[c]
+            stmt_classes[s] = {c: cls[c] for c in carried}
         if stack is not None:
-            framed, reset = fold_upsert_statements(stack, ["k"], col_classes)
-            survivors = base.join(F.broadcast(reset), ["k"], "left_anti")
-            got = canon(merge_statements_onto(survivors, framed, ["k"]))
+            got = canon(merge_statements(base, stack, ["k"], stmt_classes))
         else:
             got = canon(base)
         if got != want:

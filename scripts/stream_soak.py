@@ -352,7 +352,7 @@ def soak_upsert_policy(
     """Policy-fold streaming J3 soak (r9 verdict #6): each micro-batch is
     a merge STATEMENT (overwrite updated_us / coalesce val / keep-first
     first_val) landed as one MOR delta; the read folds the stack through
-    fold_upsert_batches. Measures per-trigger latency across a growing
+    merge_statements. Measures per-trigger latency across a growing
     base, kills and restarts the query mid-run (replay-after-kill must be
     idempotent under the fold), bounds delta fan-in via compact_every, and
     VALIDATES the final merged view against an append-only raw log of the

@@ -34,14 +34,13 @@ _ALLOWED = {
     "ml/ann.py::ivf_topk": "codebook: <=C-row centroids + queryset probes",
     "ml/ann.py::lsh_bucketed_topk": "queryset: bucketed query set",
     "operators/bloom.py::bloom_prefilter": "literal: caller-supplied word set",
-    "operators/merge.py::merge_upsert_onto": "keyset: folded delta batches — updates ≪ base is the merge-on-read invariant (both hints target the updates frame / its key projection)",
-    "operators/merge.py::merge_statements_onto": "keyset: folded statement frame — same updates ≪ base invariant, per-statement-class twin of merge_upsert_onto",
+    "operators/merge.py::merge_statements": "keyset: folded delta statements and their tombstoned keys — deltas ≪ base is the merge-on-read invariant (every hint targets a delta-derived frame / its key projection)",
     "operators/cms.py::probe_cms": "codebook: depth*width CMS cells (fixed)",
     "pipeline/company_match.py::apply_company_matches": "dim: company update set",
     "pipeline/company_match.py::match_companies": "dim: company candidate set",
     "pipeline/rank.py::rank_jobs": "dim: company dimension",
     "pipeline/report.py::daily_digest": "dim: company dimension",
-    "pipeline/store.py::_mor_apply_deltas": "keyset: delta-batch keys / reset keys (delta-sized; factored out of mor_read for bucket-scoped compaction)",
+    "pipeline/store.py::_mor_apply_deltas": "keyset: latest-wins delta-batch keys (delta-sized; factored out of mor_read for bucket-scoped compaction)",
     "queries/curation.py::q113_split_drift": "1-row: per-split stats by lang domain",
     "queries/domain.py::q14_hash_identity": "dim: nation",
     "queries/domain.py::q17_fuzzy_match": "dim: 5-row candidate company dim",

@@ -1,14 +1,15 @@
 """Merge-on-read delta resolution parity (J3 at 100 TB scale).
 
-Pins the two claims the MOR staging path rests on:
+Pins the two claims the MOR read path rests on:
 
-1. ``merge_upsert_onto`` (broadcast-shaped decomposition: left join +
+1. ``merge_statements`` (broadcast-shaped decomposition: left join +
    key-semi + anti) is result-identical to ``merge_upsert`` (full-outer
-   join) for every per-column class, nulls and null keys included.
-2. The COALESCE-merge is associative: folding a stack of delta batches
-   with ``fold_upsert_batches`` and merging ONCE equals applying
-   ``merge_upsert`` batch-by-batch — so the MOR read (one window over
-   delta rows + one base merge) is bit-identical to the COW write chain.
+   join) for every per-column class, nulls and null base keys included.
+2. The COALESCE-merge is associative: folding a stack of delta
+   statements and merging ONCE equals applying ``merge_upsert``
+   statement-by-statement — so the MOR read (one window pass over delta
+   rows + one base merge) is bit-identical to the COW write chain, for a
+   uniform table policy and for per-statement classes alike.
 
 Reference semantics: services/normalizer/db_operations.py:427-460
 (INSERT … ON CONFLICT DO UPDATE with keep-first/overwrite/COALESCE
@@ -21,16 +22,20 @@ import random
 
 from pyspark.sql import functions as F
 
-from job_etl_spark.operators.merge import (
-    fold_upsert_batches,
-    merge_upsert,
-    merge_upsert_onto,
-)
+from job_etl_spark.operators.merge import merge_statements, merge_upsert
 
 SCHEMA = "k string, ow string, co string, kf string, other string"
 CLASSES = dict(
     keys=["k"], overwrite_cols=["ow"], coalesce_cols=["co"], keep_first_cols=["kf"]
 )
+# the same table policy as per-statement classes (``other`` is unclassified:
+# keep-first)
+POLICY = {"ow": "overwrite", "co": "coalesce", "kf": "keep_first", "other": "keep_first"}
+
+
+def _policy_merge(base, stack, seqs):
+    """The MOR kernel with every statement of ``stack`` under POLICY."""
+    return merge_statements(base, stack, ["k"], {s: POLICY for s in seqs})
 
 
 def _rows(rng, keys, tag):
@@ -56,13 +61,14 @@ def _collect(df):
     return sorted(rows, key=lambda t: tuple((v is None, v) for v in t))
 
 
-def test_merge_upsert_onto_matches_full_outer(spark):
+def test_statement_merge_matches_full_outer(spark):
     rng = random.Random(90)
     keys = [f"k{i}" for i in range(40)]
     base = spark.createDataFrame(_rows(rng, keys, "b") + [(None, "ow-null", None, None, None)], SCHEMA)
-    ups = spark.createDataFrame(_rows(rng, keys, "u") + [(None, None, "co-null", None, None)], SCHEMA)
+    # no null-keyed update row: mor_upsert refuses those
+    ups = spark.createDataFrame(_rows(rng, keys, "u"), SCHEMA)
     ref = merge_upsert(base, ups, **CLASSES)
-    onto = merge_upsert_onto(base, ups, **CLASSES)
+    onto = _policy_merge(base, ups.withColumn("_seq", F.lit(1)), [1])
     assert _collect(ref) == _collect(onto)
 
 
@@ -81,9 +87,9 @@ def test_fold_equals_sequential_cow_merges(spark):
     for s, b in enumerate(batches, start=1):
         d = b.withColumn("_seq", F.lit(s))
         stack = d if stack is None else stack.unionByName(d)
-    folded, dead = fold_upsert_batches(stack, ["k"], ["ow"], ["co"])
-    assert dead.count() == 0
-    mor = merge_upsert_onto(base, folded, **CLASSES)
+    mor = _policy_merge(base, stack, range(1, 5))
+    # no tombstone in the stack: every base key survives
+    assert {r["k"] for r in base.collect()} <= {r["k"] for r in mor.collect()}
     assert _collect(cow) == _collect(mor)
 
 
@@ -106,12 +112,9 @@ def test_fold_tombstones(spark):
         [("b", "ow-3", None, None, "ot-3", False)], SCHEMA + ", _deleted boolean"
     ).withColumn("_seq", F.lit(3))
     stack = d1.unionByName(d2).unionByName(d3)
-    folded, reset = fold_upsert_batches(stack, ["k"], ["ow"], ["co"])
-    # EVERY tombstoned key resets (a dead, b revived later) — the caller
-    # anti-joins the base on the full set so revives insert fresh
-    assert sorted(r["k"] for r in reset.collect()) == ["a", "b"]
-    survivors = base.join(reset, ["k"], "left_anti")
-    out = {r["k"]: r for r in merge_upsert_onto(survivors, folded, **CLASSES).collect()}
+    # EVERY tombstoned key resets (a dead, b revived later): the base is
+    # anti-joined on the full set so revives insert fresh
+    out = {r["k"]: r for r in _policy_merge(base, stack, [1, 2, 3]).collect()}
     assert set(out) == {"b", "z"}  # a deleted, z untouched, b revived
     # b's pre-tombstone history (d1) must NOT leak into the revived row
     assert out["b"]["ow"] == "ow-3" and out["b"]["co"] is None
@@ -136,10 +139,7 @@ def test_fold_tombstone_revive_of_base_key(spark):
         [("a", "ow-2", None, None, None, False)], SCHEMA + ", _deleted boolean"
     ).withColumn("_seq", F.lit(2))
     stack = d1.unionByName(d2)
-    folded, reset = fold_upsert_batches(stack, ["k"], ["ow"], ["co"])
-    assert [r["k"] for r in reset.collect()] == ["a"]
-    survivors = base.join(reset, ["k"], "left_anti")
-    out = {r["k"]: r for r in merge_upsert_onto(survivors, folded, **CLASSES).collect()}
+    out = {r["k"]: r for r in _policy_merge(base, stack, [1, 2]).collect()}
 
     # ground truth: sequential COW — delete a, then merge d2
     cow = base.join(
@@ -158,7 +158,7 @@ def test_fold_tombstone_revive_of_base_key(spark):
 def test_policy_mor_read_never_shuffles_base(spark, tmp_path):
     """The physical plan of a policy-table mor_read must keep the base out
     of every exchange: the delta fold windows over delta rows only, and
-    the base merge is broadcast-shaped (merge_upsert_onto) — BroadcastHash
+    the base merge is broadcast-shaped (merge_statements) — BroadcastHash
     joins, no SortMergeJoin. This IS the 100 TB read-path claim: read cost
     is base-scan + delta-sized work, never an O(table) shuffle.
 
@@ -191,6 +191,49 @@ def test_policy_mor_read_never_shuffles_base(spark, tmp_path):
     plan = merged._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
+
+
+def test_fold_window_count_is_width_independent(spark, tmp_path):
+    """The statement fold builds its windows in flat projections, so the
+    merged plan's Window operator count does not grow with the table's
+    width: a policy table at 4 and at 24 data columns, each with two full
+    statements and one enricher-style partial override, plans the same
+    number of Window operators, and never a SortMergeJoin (Catalyst plans
+    on the driver, so every extra operator is driver time per read)."""
+    import re
+
+    from job_etl_spark.pipeline.runner import TableStore
+
+    def window_ops(width):
+        cols = [f"c{i}" for i in range(width)]
+        store = TableStore(spark, str(tmp_path / f"w{width}"))
+
+        def stmt(tag, n):
+            return spark.range(0, n).selectExpr(
+                "cast(id as string) k", *[f"'{tag}-{c}' {c}" for c in cols]
+            )
+
+        store.write("t", stmt("b", 200))
+        store.mor_init(
+            "t", store.read("t"), ["k"],
+            policy={"overwrite": cols[0::3], "coalesce": cols[1::3], "keep_first": cols[2::3]},
+        )
+        store.mor_upsert("t", stmt("d1", 40))
+        store.mor_upsert("t", stmt("d2", 60))
+        store.mor_upsert(
+            "t", stmt("enr", 20).select("k", *cols[1:3]), classes={"overwrite": cols[1:3]}
+        )
+        meta = store._mor_meta("t")
+        merged = store._mor_apply_deltas(
+            "t", meta, store._mor_read_base("t", meta), store.mor_deltas("t")
+        )
+        assert merged.count() == 200
+        plan = merged._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" not in plan, plan
+        return len(re.findall(r"(?m)^[\s:+-]*Window \[", plan))
+
+    narrow, wide = window_ops(4), window_ops(24)
+    assert narrow > 0 and narrow == wide, (narrow, wide)
 
 
 def test_mor_table_refuses_forking_writes(spark, tmp_path):
@@ -234,8 +277,7 @@ def test_fold_overwrite_null_wins(spark):
         "_seq", F.lit(2)
     )
     cow = merge_upsert(merge_upsert(base, d1.drop("_seq"), **CLASSES), d2.drop("_seq"), **CLASSES)
-    folded, _ = fold_upsert_batches(d1.unionByName(d2), ["k"], ["ow"], ["co"])
-    mor = merge_upsert_onto(base, folded, **CLASSES)
+    mor = _policy_merge(base, d1.unionByName(d2), [1, 2])
     assert _collect(cow) == _collect(mor)
     row = mor.first()
     assert row["ow"] is None  # d2's null overwrote
@@ -283,15 +325,10 @@ def test_mor_upsert_rejects_duplicate_key_batch(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Per-statement classes (fold_upsert_statements / merge_statements_onto):
-# the generalization the incremental enricher needs — one table accumulating
-# deltas with DIFFERENT per-column classes and partial column sets.
+# Per-statement classes: what the incremental enricher needs — one table
+# accumulating deltas with DIFFERENT per-column classes and partial column
+# sets.
 # ---------------------------------------------------------------------------
-
-from job_etl_spark.operators.merge import (  # noqa: E402
-    fold_upsert_statements,
-    merge_statements_onto,
-)
 
 _ST_SCHEMA = "k string, a string, b string, c string"
 _ST_COLS = ["a", "b", "c"]
@@ -356,7 +393,7 @@ def test_statement_fold_equals_sequential_mixed_cow(spark):
         ]
         base = spark.createDataFrame(base_rows, _ST_SCHEMA)
         cow = base
-        stack, col_classes = None, {}
+        stack, stmt_classes = None, {}
         for s in range(1, rng.randint(2, 6)):
             rows, carried, classes = _stmt_batch(rng, keys, f"t{s}")
             cow = _stmt_ground_truth(spark, cow, rows, carried, classes)
@@ -366,11 +403,8 @@ def test_statement_fold_equals_sequential_mixed_cow(spark):
                     d = d.withColumn(c, F.lit(None).cast("string"))
             d = d.withColumn("_seq", F.lit(s)).select("k", *_ST_COLS, "_deleted", "_seq")
             stack = d if stack is None else stack.unionByName(d)
-            for c in carried:
-                col_classes.setdefault(c, {})[s] = classes[c]
-        framed, reset = fold_upsert_statements(stack, ["k"], col_classes)
-        survivors = base.join(F.broadcast(reset), ["k"], "left_anti")
-        mor = merge_statements_onto(survivors, framed, ["k"])
+            stmt_classes[s] = {c: classes[c] for c in carried}
+        mor = merge_statements(base, stack, ["k"], stmt_classes)
         assert collect(cow) == collect(mor), f"trial {trial}"
 
 
@@ -422,7 +456,8 @@ def test_store_mixed_statement_round_trip(spark, tmp_path):
 def test_mor_upsert_classes_validation(spark, tmp_path):
     """Per-statement classes are rejected on latest-wins tables, for
     unknown class names, for key columns, and for columns the batch does
-    not carry."""
+    not carry; a table policy with an unknown class or a column under two
+    classes is rejected too."""
     import pytest
 
     from job_etl_spark.pipeline.runner import TableStore
@@ -444,6 +479,11 @@ def test_mor_upsert_classes_validation(spark, tmp_path):
         store.mor_upsert("pt", df, classes={"overwrite": ["k"]})
     with pytest.raises(ValueError, match="only one class"):
         store.mor_upsert("pt", df, classes={"overwrite": ["v"], "coalesce": ["v"]})
+    # the table policy is held to the same vocabulary
+    with pytest.raises(ValueError, match="only one class"):
+        store.mor_init("pt2", df, ["k"], policy={"overwrite": ["v"], "keep_first": ["v"]})
+    with pytest.raises(ValueError, match="unknown class"):
+        store.mor_init("pt2", df, ["k"], policy={"replace": ["v"]})
     assert store.mor_deltas("pt") == []
     assert store.mor_upsert("pt", df, classes={"coalesce": ["v"]}) == 1
 

@@ -530,7 +530,7 @@ def test_enrich_writeback_via_mor(spark):
     ONE delta carrying just (hash_key + the three enricher-owned columns)
     with per-statement OVERWRITE classes — the staging policy keeps those
     columns keep-first for normalize statements, so the read folds mixed
-    normalize/enrich statements through fold_upsert_statements. Write cost
+    normalize/enrich statements through merge_statements. Write cost
     O(pending): the base is NEVER rewritten by an enrich run."""
     import datetime as dt
     import glob
