@@ -40,17 +40,18 @@ def connected_components(
     Hybrid execution, same spirit as a broadcast-join threshold: the
     near-dup ACTIVE SET (docs that collide at all) is usually orders of
     magnitude smaller than the corpus, and below ``collect_max_edges``
-    (2M edges ≈ 32 MB — well under any driver heap) a single bounded
-    collect + driver union-find replaces 3-5 multi-stage label-propagation
-    jobs whose cost is pure scheduling overhead at that size (measured
-    3.7 s → <0.3 s on q58's 1.1k-edge graph at sf0.1). Above the bound —
-    the genuine 100 TB path — the distributed loop below runs unchanged.
+    (2M edges ≈ 32 MB — well under any driver heap) driver union-find
+    replaces 3-5 multi-stage label-propagation jobs whose cost is pure
+    scheduling overhead at that size (measured 3.7 s → <0.3 s on q58's
+    1.1k-edge graph at sf0.1). The size test IS the collect: one action
+    pulls at most ``collect_max_edges + 1`` edges, and fewer than that
+    many rows means the whole graph arrived. Above the bound — the
+    genuine 100 TB path — the distributed loop below runs unchanged.
     Both paths reach the same unique fixpoint (component minimum), so the
     switch is invisible to results."""
     # NULL endpoints carry no connectivity and must not reach the driver
-    # path: one NULL in toPandas() downgrades a bigint id column to
-    # float64, corrupting ids >= 2^53 and injecting NaN union-find keys
-    # (ADVICE r4). Dropped here so BOTH paths see the same clean graph.
+    # path: a NULL id would become a union-find key of its own. Dropped
+    # here so BOTH paths see the same clean graph.
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .where(F.col(src).isNotNull() & F.col(dst).isNotNull())
@@ -61,40 +62,48 @@ def connected_components(
         )
         .distinct()
     )
-    # Materialize the edge list ONCE — every iteration references it, and
-    # without a checkpoint the (possibly expensive) upstream candidate
-    # generation would re-execute per job. The count that materializes it
-    # also sizes the iteration shuffles: CC runs on the near-dup ACTIVE SET,
-    # typically orders of magnitude smaller than the corpus, so the
-    # corpus-sized shuffle width wastes per-task overhead (measured 2× on
-    # the q58 bench). Width scales with edge count and never exceeds the
-    # session's configured width.
+    # Materialize the edge list once: the bounded collect fills the lazy
+    # local checkpoint, so the distributed path (its count and every
+    # iteration) reads the checkpointed blocks instead of re-running the
+    # (possibly expensive) upstream candidate generation. A checkpoint,
+    # not persist(): AQE materializes a cached relation in a job of its
+    # own before the collect reads it. Both paths return frames that no
+    # longer read the edges, so their blocks are released on the way out.
     sym = sym.localCheckpoint(eager=False)
-    n_edges = sym.count()
-    if n_edges <= collect_max_edges:
-        return _driver_union_find(sym)
-    spark = edges.sparkSession
-    session_width = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    width = max(1, min(session_width, -(-n_edges // 250_000)))
-    old_width = spark.conf.get("spark.sql.shuffle.partitions")
-    labels = sym.select(F.col("a").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    )
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(width))
-        return _propagate(sym, labels, max_iter)
+        rows = sym.limit(collect_max_edges + 1).collect()
+        if len(rows) <= collect_max_edges:
+            return _driver_union_find(sym, rows)
+        # CC runs on the near-dup ACTIVE SET, typically orders of magnitude
+        # smaller than the corpus, so the corpus-sized shuffle width wastes
+        # per-task overhead (measured 2× on the q58 bench): width scales
+        # with edge count and never exceeds the session's configured width.
+        n_edges = sym.count()
+        spark = edges.sparkSession
+        session_width = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        width = max(1, min(session_width, -(-n_edges // 250_000)))
+        old_width = spark.conf.get("spark.sql.shuffle.partitions")
+        labels = sym.select(F.col("a").alias("node")).distinct().withColumn(
+            "label", F.col("node")
+        )
+        try:
+            spark.conf.set("spark.sql.shuffle.partitions", str(width))
+            return _propagate(sym, labels, max_iter)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old_width)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_width)
+        # drop the blocks now, not when the JVM garbage-collects the RDD:
+        # a checkpointed frame's plan is the LogicalRDD over it
+        sym._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
-def _driver_union_find(sym: DataFrame) -> DataFrame:
-    """Small-graph path: bounded collect of the (already materialized)
-    edge list, classic union-find with path compression, labels relabeled
-    to the component MINIMUM — the same unique fixpoint the distributed
-    loop converges to, independent of union order."""
+def _driver_union_find(sym: DataFrame, rows: list) -> DataFrame:
+    """Small-graph path: classic union-find with path compression over
+    the collected edge rows, labels relabeled to the component MINIMUM —
+    the same unique fixpoint the distributed loop converges to,
+    independent of union order."""
     import pandas as pd
 
-    pdf = sym.toPandas()
     parent: dict = {}
 
     def find(x):
@@ -105,9 +114,9 @@ def _driver_union_find(sym: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    # .tolist() → native Python scalars (int/str), so node ids of any
+    # Row fields are native Python scalars (int/str), so node ids of any
     # orderable type work (runner's near-dup CC keys on string hash_key)
-    for a, b in zip(pdf["a"].tolist(), pdf["b"].tolist()):
+    for a, b in rows:
         if a not in parent:
             parent[a] = a
         if b not in parent:

@@ -18,10 +18,12 @@ probability ≈ 1-(1-s^4)^4 — steep around Jaccard s≈0.7.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from job_etl_spark.functions.sqllit import lit_bigint_array
+from job_etl_spark.functions.sqllit import cached_expr, lit_bigint_array
 
 MINHASH_K = 16
 LSH_BANDS = 4
@@ -217,45 +219,40 @@ def minhash_lsh_candidates(
     )
 
 
-def simhash_from_hashes_expr(hs: Column, n_tokens: Column, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash from a precomputed token-hash array column: per bit j, the
-    sign of Σ(2·bit_j(h)−1) over tokens; bit set iff strictly positive.
+def simhash_from_hashes_expr(hs_col: str, toks_col: str, bits: int = SIMHASH_BITS) -> Column:
+    """SimHash from a precomputed token-hash array column ``hs_col``: per
+    bit j, the sign of Σ(2·bit_j(h)−1) over tokens; bit set iff strictly
+    positive. NULL when the token array ``toks_col`` is empty.
 
     Single-pass formulation: ONE fold over the token hashes carrying a
     ``bits``-wide sum vector (``zip_with`` accumulator), bit-tested
-    against a broadcast powers-of-two array via column×column
-    ``bitwiseAND`` (Spark's shiftright needs a literal shift, so shifting
-    the MASK instead of the hash is what unlocks the single pass). ~2×
-    faster than the per-bit 60-fold version it replaces — higher-order
-    functions evaluate interpreted, so array traversals, not arithmetic,
-    are the cost center. For the same reason the per-token ±1 contribution
-    is FUSED into the accumulator ``zip_with`` (one traversal per token)
-    instead of materializing a contrib array first and zip-adding it —
-    same integer adds in the same order (bit-identical), one interpreted
-    traversal + one allocation per token saved; measured 0.293 → 0.246 s
-    per sf0.1 corpus pass (r12 A/B, row equality asserted). NULL for empty
-    token lists."""
-    powers = lit_bigint_array(1 << j for j in range(bits))
+    against a literal powers-of-two array via column×column ``&``
+    (Spark's shiftright needs a literal shift, so shifting the MASK
+    instead of the hash is what unlocks the single pass). ~2× faster than
+    the per-bit 60-fold version it replaced — higher-order functions
+    evaluate interpreted, so array traversals, not arithmetic, are the
+    cost center. For the same reason the per-token ±1 contribution is
+    FUSED into the accumulator ``zip_with`` (one traversal per token)
+    instead of materializing a contrib array first and zip-adding it.
 
-    def merge(acc, h):
-        return F.zip_with(
-            acc,
-            powers,
-            lambda s, p: s
-            + F.when(h.bitwiseAND(p) != 0, F.lit(1))
-            .otherwise(F.lit(-1))
-            .cast("bigint"),
-        )
-
-    sums = F.aggregate(hs, F.array_repeat(F.lit(0).cast("bigint"), bits), merge)
-    packed = F.aggregate(
-        F.zip_with(
-            sums, powers, lambda s, p: F.when(s > 0, p).otherwise(F.lit(0).cast("bigint"))
-        ),
-        F.lit(0).cast("bigint"),
-        lambda a, x: a + x,
+    The expression is rendered as ONE SQL string and parsed once per
+    session (``cached_expr``): built from Python lambdas it cost ~900
+    py4j round trips per signature, most of a simhash query's driver
+    build time. Column names, not Columns, go in so the text is the memo
+    key; callers keep the two-step ``_toks``/``_hs`` projection so the
+    token hashes are computed once per row."""
+    powers = "array(" + ",".join(f"CAST({1 << j} AS BIGINT)" for j in range(bits)) + ")"
+    sums = (
+        f"aggregate(`{hs_col}`, array_repeat(CAST(0 AS BIGINT), {bits}), "
+        f"(acc, h) -> zip_with(acc, {powers}, "
+        "(s, p) -> s + CAST(CASE WHEN (h & p) != 0 THEN 1 ELSE -1 END AS BIGINT)))"
     )
-    return F.when(n_tokens > 0, packed)
+    packed = (
+        f"aggregate(zip_with({sums}, {powers}, "
+        "(s, p) -> CASE WHEN s > 0 THEN p ELSE CAST(0 AS BIGINT) END), "
+        "CAST(0 AS BIGINT), (a, x) -> a + x)"
+    )
+    return cached_expr(f"CASE WHEN size(`{toks_col}`) > 0 THEN {packed} END")
 
 
 def with_simhash(
@@ -272,7 +269,7 @@ def with_simhash(
         "_hs", F.transform(F.col("_toks"), hexint)
     )
     out = step.withColumn(
-        out_col, simhash_from_hashes_expr(F.col("_hs"), F.size("_toks"), bits)
+        out_col, simhash_from_hashes_expr("_hs", "_toks", bits)
     )
     return out.drop("_toks", "_hs")
 
@@ -303,11 +300,30 @@ def with_simhash_wide(
             lambda t: F.conv(F.substring(F.md5(t), 16, 15), 16, 10).cast("bigint"),
         ),
     )
-    n = F.size("_toks")
     out = step.withColumn(
-        hi_col, simhash_from_hashes_expr(F.col("_hs1"), n, SIMHASH_BITS)
-    ).withColumn(lo_col, simhash_from_hashes_expr(F.col("_hs2"), n, SIMHASH_BITS))
+        hi_col, simhash_from_hashes_expr("_hs1", "_toks", SIMHASH_BITS)
+    ).withColumn(lo_col, simhash_from_hashes_expr("_hs2", "_toks", SIMHASH_BITS))
     return out.drop("_toks", "_hs1", "_hs2")
+
+
+def _bucket_pairs_expr(
+    id_col: str, hamming_sql: Callable[[str, str], str], max_hamming: int
+) -> Column:
+    """In-bucket pair expansion over the sorted struct array ``xs``: every
+    (i < j) pair as (doc_a, doc_b, hamming), kept when hamming ≤
+    ``max_hamming``. ``hamming_sql(a, b)`` renders the pair's hamming
+    distance from the SQL text of its two structs. Rendered as one SQL
+    string (``cached_expr``) rather than nested Python lambdas: one parse
+    per session instead of a few hundred py4j round trips per build."""
+    a, b = "element_at(xs, i)", "element_at(xs, j)"
+    ham = hamming_sql(a, b)
+    return cached_expr(
+        "flatten(transform(sequence(1, size(xs) - 1), i -> filter("
+        "transform(sequence(i + 1, size(xs)), j -> named_struct("
+        f"'doc_a', {a}.`{id_col}`, 'doc_b', {b}.`{id_col}`, "
+        f"'hamming', CAST({ham} AS INT))), "
+        f"p -> p.hamming <= {int(max_hamming)})))"
+    )
 
 
 def simhash_wide_block_pairs(
@@ -366,29 +382,11 @@ def simhash_wide_block_pairs(
         )
         .where(F.size("xs") >= 2)
     )
-    n = F.size("xs")
-
-    def pair(i, j):
-        a = F.element_at(F.col("xs"), i)
-        b = F.element_at(F.col("xs"), j)
-        ham = (
-            F.bit_count(a[hi_col].bitwiseXOR(b[hi_col]))
-            + F.bit_count(a[lo_col].bitwiseXOR(b[lo_col]))
-        )
-        return F.struct(
-            a[id_col].alias("doc_a"),
-            b[id_col].alias("doc_b"),
-            ham.cast("int").alias("hamming"),
-        )
-
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.filter(
-                F.transform(F.sequence(i + 1, n), lambda j: pair(i, j)),
-                lambda p: p["hamming"] <= max_hamming,
-            ),
-        )
+    pairs = _bucket_pairs_expr(
+        id_col,
+        lambda a, b: f"bit_count({a}.`{hi_col}` ^ {b}.`{hi_col}`) "
+        f"+ bit_count({a}.`{lo_col}` ^ {b}.`{lo_col}`)",
+        max_hamming,
     )
     return (
         buckets.select(F.explode(pairs).alias("p"))
@@ -463,25 +461,8 @@ def simhash_block_pairs(
     )
     if max_bucket is not None:
         buckets = buckets.where(F.size("xs") <= max_bucket)
-    n = F.size("xs")
-
-    def pair(i, j):
-        a = F.element_at(F.col("xs"), i)
-        b = F.element_at(F.col("xs"), j)
-        return F.struct(
-            a[id_col].alias("doc_a"),
-            b[id_col].alias("doc_b"),
-            F.bit_count(a[sig_col].bitwiseXOR(b[sig_col])).cast("int").alias("hamming"),
-        )
-
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.filter(
-                F.transform(F.sequence(i + 1, n), lambda j: pair(i, j)),
-                lambda p: p["hamming"] <= max_hamming,
-            ),
-        )
+    pairs = _bucket_pairs_expr(
+        id_col, lambda a, b: f"bit_count({a}.`{sig_col}` ^ {b}.`{sig_col}`)", max_hamming
     )
     return (
         buckets.select(F.explode(pairs).alias("p"))

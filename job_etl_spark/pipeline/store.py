@@ -539,6 +539,17 @@ class TableStore:
         enforced (``_mor_writer_lock``)."""
         meta = self._mor_meta(name)
         keys = meta["keys"]
+        # a column the base lacks would land and then vanish at read (reads
+        # keep the base columns only) — refuse it before anything is
+        # written. The sidecar is the base's authoritative column list.
+        base_cols = self._mor_base_info(name, meta).get("columns")
+        if base_cols is not None:
+            unknown = [c for c in df.columns if c not in base_cols and c != "_deleted"]
+            if unknown:
+                raise ValueError(
+                    f"mor_upsert({name!r}): batch carries columns absent from "
+                    f"the base schema: {unknown}"
+                )
         if classes is not None:
             if meta.get("policy") is None:
                 raise ValueError(

@@ -777,12 +777,22 @@ QUERIES["q103_incremental_neardup"] = Query(q103_incremental_neardup, _q103_sql(
 # case), each shard reports its local top-m counts plus its threshold
 # τ_s = m-th local count. For any key missing from shard s's report its
 # count there is ≤ τ_s, so every candidate gets [lb = Σ reported,
-# ub = Σ reported-or-τ_s]; a candidate is GUARANTEED top-k when fewer
-# than k rivals have an ub above its lb (comparing lb against the k-th
-# largest lb does NOT guarantee membership — a low-lb/high-ub rival may
-# overtake). One pass per shard + a bounded (≤ S·m rows)
-# reconciliation — the comm-efficient federated top-k, vs shipping every
-# per-shard count. Exact counts joined in to witness the bounds.
+# ub = Σ reported-or-τ_s = Σ_s τ_s + Σ_kept (n − τ_s)]; a candidate is
+# GUARANTEED top-k when fewer than k rivals have an ub above its lb
+# (comparing lb against the k-th largest lb does NOT guarantee membership
+# — a low-lb/high-ub rival may overtake). One pass per shard + a bounded
+# (≤ S·m rows) reconciliation — the comm-efficient federated top-k, vs
+# shipping every per-shard count. Exact counts ride along to witness the
+# bounds.
+#
+# One lazy plan over one scan of events. The per-shard counts (a hash
+# aggregate) feed a per-user window for the exact totals (a hash
+# exchange of counts, never of raw events) and the per-shard top-m
+# window, whose partial group limit runs before its exchange. From the
+# top-m filter on, at most S·m rows remain and one global window puts
+# them in a single partition, so the per-user bounds window and the
+# rivals' collect_list need no further exchange. No cross join,
+# self-join or checkpoint: 6 jobs in one SQL execution.
 # ---------------------------------------------------------------------------
 _TPUT_SHARDS = 4
 _TPUT_M = 10
@@ -798,45 +808,37 @@ def q104_topk_bounds(spark: SparkSession, sf: str) -> DataFrame:
          % _TPUT_SHARDS).alias("shard"),
     )
     per_shard = ev.groupBy("shard", "user_id").agg(F.count(F.lit(1)).alias("n"))
-    w = Window.partitionBy("shard").orderBy(F.desc("n"), F.asc("user_id"))
-    # kept is ≤ S·m rows and feeds three consumers (tau, the candidate
-    # set, the fill join); bounds likewise feeds the ub broadcast and the
-    # flag join — checkpoint both so the events scan+agg+window runs once,
-    # not once per consumer (was 7 FileScans of events in one plan)
-    kept = per_shard.withColumn("_rn", F.row_number().over(w)).where(
-        F.col("_rn") <= _TPUT_M
-    ).localCheckpoint(eager=False)
-    tau = kept.groupBy("shard").agg(F.min("n").alias("tau"))
-    cand = kept.select("user_id").distinct()
-    shards = tau.select("shard", "tau")  # S rows — broadcast everywhere
-    grid = cand.crossJoin(F.broadcast(shards))
-    filled = grid.join(
-        kept.select("shard", "user_id", "n"), ["shard", "user_id"], "left"
+    by_shard = Window.partitionBy("shard")
+    by_user = Window.partitionBy("user_id")
+    kept = (  # every kept row carries its user's exact total
+        per_shard.withColumn("exact_n", F.sum("n").over(by_user))
+        .withColumn(
+            "_rn", F.row_number().over(by_shard.orderBy(F.desc("n"), F.asc("user_id")))
+        )
+        .where(F.col("_rn") <= _TPUT_M)
+        .withColumn("tau", F.min("n").over(by_shard))
     )
-    bounds = filled.groupBy("user_id").agg(
-        F.sum(F.coalesce(F.col("n"), F.lit(0))).alias("lb"),
-        F.sum(F.coalesce(F.col("n"), F.col("tau"))).alias("ub"),
-    ).localCheckpoint(eager=False)
+    every = Window.partitionBy()  # ≤ S·m rows: one partition by construction
+    tau_sum = kept.withColumn(  # Σ_s τ_s, each shard counted at its rank-1 row
+        "_tau_sum", F.sum(F.when(F.col("_rn") == 1, F.col("tau"))).over(every)
+    )
+    cand = tau_sum.select(
+        "user_id", "exact_n",
+        F.sum("n").over(by_user).alias("lb"),
+        (F.col("_tau_sum") + F.sum(F.col("n") - F.col("tau")).over(by_user)).alias("ub"),
+        (F.col("shard") == F.min("shard").over(by_user)).alias("_first"),
+    ).where(F.col("_first") & F.col("user_id").isNotNull())
     # TPUT guarantee: x is certainly in the true top-k iff fewer than k
     # OTHER candidates could still beat it — #{y≠x : ub_y > lb_x} < k.
-    # (Comparing lb against the k-th largest lb does NOT guarantee
-    # membership: a candidate with a small lb but large ub may overtake.)
-    # The candidate set is bounded (≤ S·m rows), so the non-equi
-    # self-comparison is a broadcast of ≤ S·m ubs.
-    ubs = bounds.select(
-        F.col("user_id").alias("_uid2"), F.col("ub").alias("_ub2")
-    )
-    flagged = (
-        bounds.join(F.broadcast(ubs), F.col("_ub2") > F.col("lb"), "left")
-        .groupBy("user_id", "lb", "ub")
-        .agg(
-            F.count(F.when(F.col("_uid2") != F.col("user_id"), 1)).alias("_n_above")
-        )
-    )
-    exact = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact_n"))
-    return flagged.join(exact, "user_id").select(
+    # NULL user_id rows leave before the rivals list: their != is NULL,
+    # so they never counted as rivals, and the result drops them.
+    return cand.withColumn(
+        "_rivals", F.collect_list(F.struct("user_id", "ub")).over(every)
+    ).select(
         "user_id", "lb", "ub", "exact_n",
-        (F.col("_n_above") < _TPUT_K).alias("guaranteed"),
+        F.expr(
+            f"size(filter(_rivals, r -> r.ub > lb AND r.user_id != user_id)) < {_TPUT_K}"
+        ).alias("guaranteed"),
     )
 
 

@@ -2,11 +2,15 @@
 
 Runs each query to the noop sink in a ``get_spark`` session, after the
 q01 warm-up time_query.py uses, and tags every run with ``setJobGroup``.
+The build — the ``fn(spark, sf)`` call that returns the DataFrame, before
+the write — is timed on its own, and the py4j commands it sends to the
+JVM are counted: that is the driver-planning layer.
 The session's JVM starts with an uncompressed, non-rolling event log,
 switched on through a temporary SPARK_CONF_DIR as perfbench/run.py does.
 After the session stops, ``perfbench.trace`` parses that log. For each
 query's best (lowest-wall) run it prints:
 
+- the build time and its py4j command count;
 - jobs, stages and tasks;
 - job time (the union of job intervals) and the driver gap (wall minus
   job time: planning, collects and scheduling that no job covers);
@@ -93,6 +97,31 @@ def operator_lines(plan: dict, totals: dict[int, float], depth: int = 0):
         yield from operator_lines(child, totals, depth + bool(mets))
 
 
+def timed_build(fn, spark, sf: str):
+    """(DataFrame, build seconds, py4j commands) of ``fn(spark, sf)``:
+    the driver's share before any write — analysis, plan building, and
+    any job the query runs while it builds. Commands are counted by
+    wrapping the py4j client's ``send_command`` for the call."""
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    n = 0
+
+    def counting(self, command):
+        nonlocal n
+        n += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        t0 = time.perf_counter()
+        df = fn(spark, sf)
+        build_s = time.perf_counter() - t0
+    finally:
+        ClientServerConnection.send_command = send
+    return df, build_s, n
+
+
 def enable_event_log(work: Path) -> None:
     """Point the JVM that ``get_spark`` will launch at ``work/conf``, which
     turns the event log on into ``work/eventlog``; ``get_spark`` itself is
@@ -128,6 +157,7 @@ def main() -> None:
         spark = get_spark("jobspark-profile")
         sc = spark.sparkContext
         windows: dict[str, tuple[float, float]] = {}
+        builds: dict[str, tuple[float, int]] = {}
         try:
             reg["q01_pricing_summary"].fn(spark, args.sf).write.format("noop").mode("overwrite").save()
             for name in names:
@@ -135,8 +165,10 @@ def main() -> None:
                     group = f"{name}#{k}"
                     sc.setJobGroup(group, group)
                     t0 = time.time() * 1000.0
-                    reg[name].fn(spark, args.sf).write.format("noop").mode("overwrite").save()
+                    df, build_s, calls = timed_build(reg[name].fn, spark, args.sf)
+                    df.write.format("noop").mode("overwrite").save()
                     windows[group] = (t0, time.time() * 1000.0)
+                    builds[group] = (build_s, calls)
         finally:
             stop_spark(spark)
         logs = sorted((work / "eventlog").iterdir())
@@ -154,6 +186,8 @@ def main() -> None:
         job_ms = tr.union_ms(tr.clip(gs.job_intervals, lo, hi))
         walls = ", ".join(f"{(windows[g][1] - windows[g][0]) / 1000:.3f}" for g in runs)
         print(f"\n=== {name}: best wall {(hi - lo) / 1000:.3f}s (runs {walls}) ===")
+        build_s, calls = builds[best]
+        print(f"  build {build_s:.3f}s, {calls} py4j commands")
         print(
             f"  {gs.jobs} jobs, {gs.stages} stages, {gs.tasks} tasks; job time "
             f"{job_ms / 1000:.3f}s, driver gap {(hi - lo - job_ms) / 1000:.3f}s"

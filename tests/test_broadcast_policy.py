@@ -76,7 +76,6 @@ _ALLOWED = {
     "queries/relational.py::q79_local_supplier_volume": "dim: nation-joined customer/supplier",
     "queries/relational.py::q83_trimmed_stats": "1-row-per-type: quantile bounds over the type domain",
     "queries/scaleops.py::q90_source_mixture": "1-row-per-source: stats over the source domain",
-    "queries/sketches.py::q104_topk_bounds": "literal+1-row: shard grid, kth-lb threshold",
     "queries/sketches.py::q106_equidepth_bins": "cap: B-row bin bounds",
     "queries/sketches.py::q109_zscore_outliers": "1-row-per-type: stats over the type domain",
     "queries/sketches.py::q97_vocab_oov": "cap: LIMIT-V vocab (counts hint removed r5)",

@@ -57,6 +57,16 @@ _BUDGET_RAISE_OK: dict[str, dict] = {
         "hide — visibility change, not new work (the documents scan is "
         "one pruned id column)",
     },
+    "q104_topk_bounds": {
+        "shuffles": 5,
+        "why": "dropped both lazy localCheckpoints, the cross join and the "
+        "two self-joins: one lazy plan whose per-shard counts feed the "
+        "exact per-user window and the per-shard top-m window, then a "
+        "single-partition reconciliation of <= S*m kept rows. The "
+        "checkpoints used to hide their subtrees' shuffles, so the plan "
+        "now SHOWS them; the query runs 6 jobs instead of 13 and scans "
+        "events once",
+    },
     "q27_embedding_neardup": {
         "shuffles": 6,
         "why": "r11: explicit hash-repartition of the deduped id-pair "

@@ -631,6 +631,30 @@ def test_mor_upsert_rejects_null_keys(spark, tmp_path):
     assert store.mor_deltas("t") == []
 
 
+def test_mor_upsert_rejects_unknown_columns(spark, tmp_path):
+    """A batch column the base schema lacks (other than the _deleted
+    tombstone) would land and then be dropped at read without a word —
+    mor_upsert refuses it before writing, for policy and latest-wins
+    tables alike."""
+    import pytest
+
+    from job_etl_spark.pipeline.runner import TableStore
+
+    store = TableStore(spark, str(tmp_path))
+    base = spark.createDataFrame([("a", "x")], "k string, v string")
+    extra = spark.createDataFrame([("a", "y", "e")], "k string, v string, extra string")
+    for name, policy in (("pol", {"coalesce": ["v"]}), ("lw", None)):
+        store.write(name, base)
+        store.mor_init(name, store.read(name), ["k"], policy=policy)
+        with pytest.raises(ValueError, match="extra"):
+            store.mor_upsert(name, extra)
+        assert store.mor_deltas(name) == []
+        # the tombstone column is not an unknown column
+        tomb = spark.createDataFrame([("a", "y", False)], "k string, v string, _deleted boolean")
+        assert store.mor_upsert(name, tomb) == 1
+        assert [tuple(r) for r in store.read(name).collect()] == [("a", "y")]
+
+
 def test_mor_stages_dry_run_is_pure(spark, tmp_path):
     """run_enrich/run_rank with mor=True + dry_run=True must not migrate
     the table layout (a dry run mutates nothing)."""

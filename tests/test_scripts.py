@@ -100,3 +100,18 @@ def test_profile_query_reads_operator_metrics_from_event_log():
         "Filter  number of output rows=10",
         "  Scan parquet  number of output rows=20, scan time=2.5ms",
     ]
+
+
+def test_profile_query_times_the_build(spark):
+    """The build layer: fn(spark, sf) timed apart from the write, with the
+    py4j commands it sent, and the client's send_command restored after."""
+    from py4j.clientserver import ClientServerConnection
+
+    from job_etl_spark.queries import registry
+    from scripts.profile_query import timed_build
+
+    send = ClientServerConnection.send_command
+    df, build_s, calls = timed_build(registry()["q01_pricing_summary"].fn, spark, SF_SMOKE)
+    assert ClientServerConnection.send_command is send
+    assert build_s > 0 and calls > 0
+    assert df.columns  # a DataFrame, not yet written
