@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from job_etl_spark.functions.identity import company_id_expr
-from job_etl_spark.operators.watermark import high_watermark
+from job_etl_spark.operators.watermark import EPOCH_FLOOR, high_watermark
 
 
 def build_dim_companies(companies: DataFrame, existing: DataFrame | None = None) -> DataFrame:
@@ -133,11 +133,18 @@ def fact_increment(staging: DataFrame, existing_fact: DataFrame | None, run_ts) 
     projected with NULL rank columns. This frame is both the COW
     rebuild's fresh half and, verbatim, the merge-on-read delta — under
     ``fact_merge_policy`` the fold performs the rank carry that the COW
-    path expresses as the J2 self-join."""
+    path expresses as the J2 self-join. An empty or missing fact table
+    admits every staging row; otherwise the watermark is MAX(ingested_at)
+    with the 1900 floor, and NULL first_seen_at rows stay out. One
+    aggregate gives both the emptiness and the watermark."""
     new_rows = staging
-    if existing_fact is not None and existing_fact.head(1):
-        wm = high_watermark(existing_fact, "ingested_at")
-        new_rows = staging.where(F.col("first_seen_at") > F.lit(wm))
+    if existing_fact is not None:
+        r = existing_fact.agg(
+            F.count(F.lit(1)).alias("n"), F.max("ingested_at").alias("wm")
+        ).first()
+        if r["n"]:
+            wm = r["wm"] if r["wm"] is not None else EPOCH_FLOOR
+            new_rows = staging.where(F.col("first_seen_at") > F.lit(wm))
     return fact_projection(new_rows, run_ts)
 
 

@@ -4,9 +4,10 @@
 The reference loops rows through ``map_to_common`` → ``normalize_job_posting``
 → batch upsert. Here the whole stage is one declarative plan:
 
-  common columns → validity predicate (required fields) → split ok/reject
+  common columns → validity predicate (required fields) → reject side-output
   → enum defaults, timestamp/numeric parse, salary swap, hash identity
-  → COALESCE-merge upsert into staging
+  → within-batch dedup (rejected rows leave after it) → COALESCE-merge
+  upsert into staging
 
 Everything is native expressions — no Python row loop, no UDF — so the
 stage is a single map + one keyed shuffle at any scale.
@@ -16,7 +17,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from job_etl_spark.functions.identity import hash_key_expr, strip_ws
@@ -38,6 +39,9 @@ from job_etl_spark.schema import (
 class NormalizeResult:
     normalized: DataFrame
     rejected: DataFrame  # P6 side-output: failed rows counted, not fatal
+    # ``normalized`` and ``rejected`` row counts, reported by the first
+    # action that runs ``normalized``
+    counts: Observation
 
 
 def _required_ok(c: str):
@@ -50,6 +54,13 @@ def normalize_common(common: DataFrame, run_ts) -> NormalizeResult:
 
     ``run_ts`` replaces the reference's NOW() stamping so runs are
     reproducible (SURVEY.md §7.3 non-deterministic-timestamps note).
+
+    Rejected rows ride the dedup shuffle under keys of their own and are
+    dropped after it, where ``counts`` observes both row counts, so the
+    action that writes ``normalized`` reports them. An observation below
+    the shuffle would be lost for a batch with no valid row: adaptive
+    execution drops an empty shuffle stage from the plan, and its
+    observed metrics with it.
     """
     valid = _required_ok("job_title") & _required_ok("company") & _required_ok("location")
     rejected = common.where(~valid).withColumn(
@@ -58,7 +69,6 @@ def normalize_common(common: DataFrame, run_ts) -> NormalizeResult:
         .when(~_required_ok("company"), "company is required")
         .otherwise("location is required"),
     )
-    ok = common.where(valid)
 
     sal_min, sal_max = salary_bounds_exprs(
         safe_double_expr("salary_min"), safe_double_expr("salary_max")
@@ -76,9 +86,14 @@ def normalize_common(common: DataFrame, run_ts) -> NormalizeResult:
         )
     else:
         order_col = F.monotonically_increasing_id()
-    normalized = ok.withColumn("_ord", order_col).select(
+    # a valid hash_key is 32 hex chars, so no '!'-prefixed key collides
+    # with one; _ord is unique per row, so no rejected row is deduped
+    normalized = common.withColumns({"_ord": order_col, "_valid": valid}).select(
         F.col("_ord"),
-        hash_key_expr("company", "job_title", "location").alias("hash_key"),
+        F.col("_valid"),
+        F.when(F.col("_valid"), hash_key_expr("company", "job_title", "location"))
+        .otherwise(F.concat(F.lit("!"), F.col("_ord").cast("string")))
+        .alias("hash_key"),
         F.col("provider_job_id"),
         F.col("job_link"),
         strip_ws("job_title").alias("job_title"),  # python-strip semantics
@@ -119,7 +134,14 @@ def normalize_common(common: DataFrame, run_ts) -> NormalizeResult:
         .where(F.col("_rn") == 1)
         .drop("_rn", "_ord")
     )
-    return NormalizeResult(normalized=merged, rejected=rejected)
+    counts = Observation()
+    merged = merged.observe(
+        counts,
+        F.count_if(F.col("_valid")).alias("normalized"),
+        F.count_if(~F.col("_valid")).alias("rejected"),
+    )
+    merged = merged.where(F.col("_valid")).drop("_valid")
+    return NormalizeResult(normalized=merged, rejected=rejected, counts=counts)
 
 
 def staging_merge_policy() -> dict:

@@ -47,18 +47,26 @@ def staging_stats(staging: DataFrame) -> dict:
     return {**g.asDict(), "per_source": per_source}
 
 
-def ranking_stats(fact: DataFrame) -> dict:
-    """A3 (ranker/db_operations.py:318-369)."""
-    r = fact.agg(
+def ranking_aggs() -> list:
+    """A3's aggregates (ranker/db_operations.py:318-369), for an ``agg``
+    or an ``observe`` over fact rows."""
+    return [
         F.count(F.lit(1)).alias("total_jobs"),
         F.count("rank_score").alias("ranked_jobs"),
         F.avg("rank_score").alias("avg_score"),
         F.max("rank_score").alias("max_score"),
         F.min("rank_score").alias("min_score"),
-    ).first()
-    d = r.asDict()
-    d["unranked_jobs"] = d["total_jobs"] - d["ranked_jobs"]
-    return d
+    ]
+
+
+def ranking_dict(values: dict) -> dict:
+    """A3's stats from the values of ``ranking_aggs``."""
+    return {**values, "unranked_jobs": values["total_jobs"] - values["ranked_jobs"]}
+
+
+def ranking_stats(fact: DataFrame) -> dict:
+    """A3 (ranker/db_operations.py:318-369)."""
+    return ranking_dict(fact.agg(*ranking_aggs()).first().asDict())
 
 
 def daily_digest(

@@ -18,7 +18,8 @@ import json
 import sys
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from job_etl_spark.operators import dq
@@ -41,6 +42,30 @@ from job_etl_spark.schema import (
 )
 from job_etl_spark.sources.base import SourceAdapter, common_from_raw, land_raw
 from job_etl_spark.sources.mock_adapter import MockAdapter
+
+
+def _observed(obs: Observation) -> dict:
+    """The metrics that ``df.observe(obs, ...)`` reported to the action
+    that ran ``df``. Stage stats ride the stage's writes this way instead
+    of running jobs of their own.
+
+    An observed frame must reach exactly one action, in a place no
+    optimizer rule can drop: the optimizer drops an empty
+    ``createDataFrame`` on one side of a full outer join, and adaptive
+    execution drops a shuffle stage that produced no rows, each with the
+    observations inside it. Observe above a stage's shuffles."""
+    try:
+        return obs.get
+    except (Py4JJavaError, AssertionError) as e:
+        raise RuntimeError(
+            "an observed stage frame reported no metrics: the optimizer "
+            "pruned the observed node from the plan that ran"
+        ) from e
+
+
+def _noop(df: DataFrame) -> None:
+    """Run ``df`` without writing it: a dry run's one action."""
+    df.write.format("noop").mode("overwrite").save()
 
 
 def run_extract(
@@ -88,30 +113,20 @@ def run_normalize(
         raw = raw.where(F.col("collected_at") >= F.lit(min_collected_at))
     if limit:
         raw = raw.orderBy(F.desc("collected_at"), F.asc("raw_id")).limit(limit)
-    common = common_from_raw(raw, adapter)
-    res = normalize_common(common, run_ts)
-    # the batch plan is executed twice (row count for the stats/exit-code
-    # contract, then the write) — pin it so the raw scan + normalize
-    # expressions run once, not per action
-    normalized = res.normalized.persist()
-    # try/finally: mor_upsert can raise (duplicate/null keys) — the cached
-    # blocks must not outlive the stage on the error path
-    try:
-        n_ok = normalized.count()
-        n_bad = res.rejected.count()
-        if not dry_run:
-            if mor:
-                _ensure_staging_mor(store, mor_buckets)
-                if n_ok:  # an empty batch must not grow the delta chain
-                    store.mor_upsert("staging_job_postings", normalized)
-                    _compact_if_due(store, "staging_job_postings", compact_every)
-            else:
-                staging = store.read("staging_job_postings", STAGING_SCHEMA)
-                merged = merge_into_staging(staging, normalized)
-                store.rewrite("staging_job_postings", merged)
-    finally:
-        normalized.unpersist()
-    return {"normalized": n_ok, "rejected": n_bad, "dry_run": dry_run}
+    # the stats/exit-code contract rides the batch's one write (a dry run
+    # sends the same frame to the noop sink)
+    res = normalize_common(common_from_raw(raw, adapter), run_ts)
+    if dry_run:
+        _noop(res.normalized)
+    elif mor:
+        _ensure_staging_mor(store, mor_buckets)
+        # an empty batch registers no delta
+        if store.mor_upsert("staging_job_postings", res.normalized) is not None:
+            _compact_if_due(store, "staging_job_postings", compact_every)
+    else:
+        staging = store.read("staging_job_postings", STAGING_SCHEMA)
+        store.rewrite("staging_job_postings", merge_into_staging(staging, res.normalized))
+    return {**_observed(res.counts), "dry_run": dry_run}
 
 
 def run_enrich(
@@ -147,110 +162,92 @@ def run_enrich(
         _ensure_staging_mor(store, mor_buckets)
     staging = store.read("staging_job_postings", STAGING_SCHEMA)
     dictionary = SkillsDictionary.load(dictionary_path)
-    pending_rows = None
-    # try/finally: mor_upsert can raise (duplicate/null keys) — the cached
-    # pending subset must not outlive the stage on the error path
-    try:
-        if mor:
-            # the pending subset: exactly the rows either enrichment phase
-            # would touch (S6 skills predicate ∪ S7 seniority-pending).
-            # Materialize it ONCE — the before_pending stat, the enrich
-            # expressions, the delta count, and the delta write all run over
-            # the pinned subset instead of re-scanning the table per action
-            # (the probe showed the stat scan costing as much as the write
-            # savings at 3M rows).
-            skills_cond = F.col("description").isNotNull()
-            if not include_existing:
-                skills_cond = skills_cond & (
-                    F.col("skills_raw").isNull() | (F.size("skills_raw") == 0)
-                )
-            if sources:
-                skills_cond = skills_cond & F.col("source").isin(sources)
-            pending_rows = staging.where(
-                skills_cond | (F.col("seniority_enrichment_status") == "not_tried")
-            ).persist()
-            before_pending = pending_rows.where(
-                F.col("seniority_enrichment_status") == "not_tried"
-            ).count()
-            enriched = enrich_skills(pending_rows, dictionary, sources, include_existing)
-            enriched = enrich_seniority(enriched)
-        else:
-            before_pending = staging.where(
-                F.col("seniority_enrichment_status") == "not_tried"
-            ).count()
-            enriched = enrich_skills(staging, dictionary, sources, include_existing)
-            enriched = enrich_seniority(enriched)
-        companies_schema = (
-            "company_id string, name string, source_first_seen string, "
-            "enriched_at timestamp, created_at timestamp, updated_at timestamp"
-        )
-        companies = store.read("staging_companies", companies_schema)
-        # company seeding scans ALL distinct staging companies (J4 over the
-        # whole table), not just the pending rows — in MOR mode `enriched` is
-        # pending-only, so seed from the full merged view
-        companies2 = seed_company_records(companies, staging if mor else enriched, run_ts)
-        stats = {
-            "seniority_pending_before": before_pending,
-            "dry_run": dry_run,
-        }
-        # company enrichment sub-phase (U6/J5/S13): runs when a cached
-        # candidates table exists (offline snapshot of per-name API results);
-        # matched + unmatched pending rows both get enriched_at stamped
-        if store.exists("company_candidates"):
-            from job_etl_spark.pipeline.company_match import (
-                apply_company_matches,
-                match_companies,
+    not_tried = F.col("seniority_enrichment_status") == "not_tried"
+    pend, comp = Observation(), Observation()
+    if mor:
+        # the pending subset: exactly the rows either enrichment phase
+        # would touch (S6 skills predicate ∪ S7 seniority-pending). Its
+        # stats ride the delta write, which runs the subset once.
+        skills_cond = F.col("description").isNotNull()
+        if not include_existing:
+            skills_cond = skills_cond & (
+                F.col("skills_raw").isNull() | (F.size("skills_raw") == 0)
             )
+        if sources:
+            skills_cond = skills_cond & F.col("source").isin(sources)
+        pending = staging.where(skills_cond | not_tried).observe(
+            pend,
+            F.count_if(not_tried).alias("seniority_pending_before"),
+            F.count(F.lit(1)).alias("enriched_rows"),
+        )
+    else:
+        # the whole table is rewritten; its pending count rides that write
+        pending = staging.observe(pend, F.count_if(not_tried).alias("seniority_pending_before"))
+    enriched = enrich_seniority(enrich_skills(pending, dictionary, sources, include_existing))
+    companies_schema = (
+        "company_id string, name string, source_first_seen string, "
+        "enriched_at timestamp, created_at timestamp, updated_at timestamp"
+    )
+    companies = store.read("staging_companies", companies_schema)
+    # company seeding scans ALL distinct staging companies (J4 over the
+    # whole table), not just the pending rows. Enrichment does not change
+    # the columns it reads, so seed from the unobserved staging read: the
+    # observed frame then feeds exactly one action.
+    companies2 = seed_company_records(companies, staging, run_ts)
+    n_matched = None
+    # company enrichment sub-phase (U6/J5/S13): runs when a cached
+    # candidates table exists (offline snapshot of per-name API results);
+    # matched + unmatched pending rows both get enriched_at stamped
+    if store.exists("company_candidates"):
+        from job_etl_spark.pipeline.company_match import (
+            apply_company_matches,
+            match_companies,
+        )
 
-            candidates = store.read("company_candidates")
-            matches = match_companies(companies2, candidates)
-            n_matched = matches.where(F.col("candidate_name").isNotNull()).count()
-            stats["companies_matched"] = n_matched
-            companies2 = apply_company_matches(companies2, matches, run_ts)
-        if not dry_run:
-            if mor:
-                # O(pending) delta: keys + the three enricher-owned columns,
-                # OVERWRITE per-statement classes (the table policy keeps them
-                # keep-first for normalize statements). Empty pending must not
-                # grow the delta chain.
-                # (count + write both run over the pinned pending subset)
-                delta = enriched.select(
-                    "hash_key",
-                    "skills_raw",
-                    "seniority_level",
-                    "seniority_enrichment_status",
-                )
-                n_pending = delta.count()
-                stats["enriched_rows"] = n_pending
-                if n_pending:
-                    store.mor_upsert(
-                        "staging_job_postings",
-                        delta,
-                        classes={
-                            "overwrite": [
-                                "skills_raw",
-                                "seniority_level",
-                                "seniority_enrichment_status",
-                            ]
-                        },
-                    )
-                # companies2's plan reads the staging view lazily, but a delta
-                # APPEND never invalidates already-listed files — only the
-                # 1-in-N compaction swaps the base, so compact strictly last
-                store.rewrite("staging_companies", companies2)
-                stats["companies_total"] = store.read("staging_companies").count()
-                _compact_if_due(store, "staging_job_postings", compact_every)
-            else:
-                # companies2's plan reads staging; two-phase swap avoids reading
-                # files deleted by the staging rewrite
-                store.rewrite_many(
-                    {"staging_job_postings": enriched, "staging_companies": companies2}
-                )
-                stats["companies_total"] = store.read("staging_companies").count()
-        return stats
-    finally:
-        if pending_rows is not None:
-            pending_rows.unpersist()
+        candidates = store.read("company_candidates")
+        matches = match_companies(companies2, candidates)
+        n_matched = matches.where(F.col("candidate_name").isNotNull()).count()
+        companies2 = apply_company_matches(companies2, matches, run_ts)
+    companies2 = companies2.observe(comp, F.count(F.lit(1)).alias("companies_total"))
+    if dry_run:
+        _noop(enriched)
+    elif mor:
+        # O(pending) delta: keys + the three enricher-owned columns,
+        # OVERWRITE per-statement classes (the table policy keeps them
+        # keep-first for normalize statements). An empty pending subset
+        # registers no delta.
+        store.mor_upsert(
+            "staging_job_postings",
+            enriched.select(
+                "hash_key", "skills_raw", "seniority_level", "seniority_enrichment_status"
+            ),
+            classes={
+                "overwrite": ["skills_raw", "seniority_level", "seniority_enrichment_status"]
+            },
+        )
+        # companies2's plan reads the staging view lazily, but a delta
+        # APPEND never invalidates already-listed files — only the
+        # 1-in-N compaction swaps the base, so compact strictly last
+        store.rewrite("staging_companies", companies2)
+        _compact_if_due(store, "staging_job_postings", compact_every)
+    else:
+        # companies2's plan reads staging; two-phase swap avoids reading
+        # files deleted by the staging rewrite
+        store.rewrite_many(
+            {"staging_job_postings": enriched, "staging_companies": companies2}
+        )
+    pending_stats = _observed(pend)
+    stats = {
+        "seniority_pending_before": pending_stats["seniority_pending_before"],
+        "dry_run": dry_run,
+    }
+    if n_matched is not None:
+        stats["companies_matched"] = n_matched
+    if not dry_run:
+        if mor:
+            stats["enriched_rows"] = pending_stats["enriched_rows"]
+        stats["companies_total"] = _observed(comp)["companies_total"]
+    return stats
 
 
 def _ensure_staging_mor(store: TableStore, buckets: int | None) -> None:
@@ -341,11 +338,13 @@ def run_marts(
             store, staging, companies, run_ts, mor_buckets, compact_every
         )
     existing_fact = store.read("fact_jobs") if store.exists("fact_jobs") else None
+    # each table's size rides its rewrite
+    dim_obs, fact_obs = Observation(), Observation()
     dim = build_dim_companies(companies, None)
     fact = build_fact_jobs(staging, existing_fact, run_ts)
-    store.rewrite("dim_companies", dim)
-    store.rewrite("fact_jobs", fact)
-    return {"dim_rows": store.read("dim_companies").count(), "fact_rows": store.read("fact_jobs").count()}
+    store.rewrite("dim_companies", dim.observe(dim_obs, F.count(F.lit(1)).alias("dim_rows")))
+    store.rewrite("fact_jobs", fact.observe(fact_obs, F.count(F.lit(1)).alias("fact_rows")))
+    return {**_observed(dim_obs), **_observed(fact_obs)}
 
 
 def _run_marts_mor(
@@ -374,14 +373,10 @@ def _run_marts_mor(
         fresh = build_dim_companies(companies, None)
         if wm is not None:
             fresh = fresh.where(F.col("created_at") > F.lit(wm))
-        fresh = fresh.persist()  # count + delta write: one execution
-        try:
-            n_dim = fresh.count()
-            stats["dim_new"] = n_dim
-            if n_dim:  # an empty increment must not grow the delta chain
-                store.mor_upsert("dim_companies", fresh)
-        finally:
-            fresh.unpersist()
+        obs = Observation()
+        # an empty increment lands nothing
+        store.mor_upsert("dim_companies", fresh.observe(obs, F.count(F.lit(1)).alias("dim_new")))
+        stats.update(_observed(obs))
     # -- fact_jobs: the increment as ONE delta under fact_merge_policy
     # (rank carry via the fold's COALESCE — no self-join, no base write)
     had_fact = store.exists("fact_jobs")
@@ -398,14 +393,9 @@ def _run_marts_mor(
     else:
         _ensure_fact_mor(store, mor_buckets)  # migrate/upgrade if needed
         existing = store.read("fact_jobs")
-        inc = fact_increment(staging, existing, run_ts).persist()
-        try:
-            n_fact = inc.count()
-            stats["fact_new"] = n_fact
-            if n_fact:
-                store.mor_upsert("fact_jobs", inc)
-        finally:
-            inc.unpersist()
+        inc, obs = fact_increment(staging, existing, run_ts), Observation()
+        store.mor_upsert("fact_jobs", inc.observe(obs, F.count(F.lit(1)).alias("fact_new")))
+        stats.update(_observed(obs))
         _compact_if_due(store, "fact_jobs", compact_every)
     stats["dim_rows"] = store.read("dim_companies").count()
     stats["fact_rows"] = store.read("fact_jobs").count()
@@ -447,33 +437,25 @@ def run_rank(
     to_rank = fact.where(target)
     if limit:
         to_rank = to_rank.orderBy(F.desc("ingested_at"), F.asc("hash_key")).limit(limit)
-    # count + write(s) re-execute the scoring plan otherwise (the COW arm
-    # reads it twice more: key anti-join + the union) — pin it once
-    ranked = rank_jobs(to_rank, None, cfg).persist()
-    # try/finally: mor_upsert can raise (duplicate/null keys) — the cached
-    # ranked batch must not outlive the stage on the error path
-    try:
-        n = ranked.count()
-        if not dry_run:
-            if mor:
-                if n:  # an empty batch must not grow the delta chain
-                    store.mor_upsert("fact_jobs", ranked.select(*fact.columns))
-            else:
-                untouched = fact.join(
-                    ranked.select("hash_key"), "hash_key", "left_anti"
-                )
-                store.rewrite(
-                    "fact_jobs", untouched.unionByName(ranked.select(*fact.columns))
-                )
-        if dry_run:
-            stats = {}
-        else:
-            # store.read is MOR-aware, so downstream stages and these stats
-            # see the merged view regardless of write-back strategy
-            stats = report_mod.ranking_stats(store.read("fact_jobs"))
-        return {"ranked_now": n, "dry_run": dry_run, **stats}
-    finally:
-        ranked.unpersist()
+    ranked = rank_jobs(to_rank, None, cfg)
+    # ranked_now rides the ranked branch of the one write; the COW arm's
+    # key anti-join reads the unobserved plan (scoring is a map: running it
+    # twice costs less than a cache)
+    rank_obs, stats = Observation(), {}
+    observed = ranked.select(*fact.columns).observe(rank_obs, F.count(F.lit(1)).alias("ranked_now"))
+    if dry_run:
+        _noop(observed)
+    elif mor:
+        store.mor_upsert("fact_jobs", observed)  # an empty batch lands nothing
+        # the merged view: downstream stages and these stats see the same
+        stats = report_mod.ranking_stats(store.read("fact_jobs"))
+    else:
+        untouched = fact.join(ranked.select("hash_key"), "hash_key", "left_anti")
+        table_obs = Observation()
+        table = untouched.unionByName(observed).observe(table_obs, *report_mod.ranking_aggs())
+        store.rewrite("fact_jobs", table)
+        stats = report_mod.ranking_dict(_observed(table_obs))
+    return {**_observed(rank_obs), "dry_run": dry_run, **stats}
 
 
 def run_dq(store: TableStore) -> list[dq.DQResult]:

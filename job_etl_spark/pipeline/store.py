@@ -2,7 +2,9 @@
 
 ``TableStore`` persists every stage's tables as parquet directories with
 atomic overwrite-rewrite (copy-on-write) and an LSM-style merge-on-read
-layout (immutable deltas folded at read time, compacted offline).
+layout (immutable deltas folded at read time, compacted offline). Each
+copy-on-write table, merge-on-read base and delta carries its schema in a
+``_SCHEMA.json`` sidecar, so reading it plans without a Spark job.
 """
 
 from __future__ import annotations
@@ -15,6 +17,7 @@ from contextlib import ExitStack, contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from job_etl_spark.operators.merge import merge_statements, normalize_policy
 
@@ -62,6 +65,51 @@ def _swap(live: str, new: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
+# A table's (or a MOR base's, or a delta's) schema sidecar. The underscore
+# hides it from Spark's file listing, so it rides inside the data dir and
+# commits with it.
+_SCHEMA = "_SCHEMA.json"
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` as parquet reads it back: every field, element and value
+    nullable."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _write_schema(dest: str, schema: StructType, **extra) -> None:
+    """Record ``schema`` as the sidecar of the parquet dir ``dest``:
+    ``{"columns", "schema"}`` plus ``extra`` (a MOR base's ``folded``
+    delta seq). A read with the sidecar's schema launches no Spark job;
+    without it, Spark reads a parquet footer in a one-task job."""
+    info = {"columns": schema.names, "schema": _nullable(schema).json(), **extra}
+    _write_atomic(os.path.join(dest, _SCHEMA), json.dumps(info))
+
+
+def _read_schema(dest: str) -> dict | None:
+    """The sidecar of ``dest``, or None when it has none."""
+    try:
+        with open(os.path.join(dest, _SCHEMA)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def _drop_schema(dest: str) -> None:
+    try:
+        os.remove(os.path.join(dest, _SCHEMA))
+    except FileNotFoundError:
+        pass
+
+
 def _write_atomic(path: str, text: str) -> None:
     """The one file commit: write a sibling ``.tmp`` file, then
     ``os.replace`` it over ``path``, so a reader sees the old or the new
@@ -101,11 +149,17 @@ class TableStore:
         )
 
     def read(self, name: str, schema=None, merge_schema: bool = False) -> DataFrame:
-        """``merge_schema=True`` unions the footer schemas of every file
-        (parquet schema evolution): rows written before a column existed
-        read as NULL. Off by default — the merge pass reads every footer,
-        which is a real cost on a 100 TB table; flip it only for tables
-        that actually evolve.
+        """A copy-on-write table reads under its ``_SCHEMA.json`` sidecar,
+        so the read launches no Spark job. A table without one (written
+        before sidecars, partitioned, or appended with a different
+        schema) infers its schema from a parquet footer, which Spark does
+        in a one-task job.
+
+        ``merge_schema=True`` ignores the sidecar and unions the footer
+        schemas of every file (parquet schema evolution): rows written
+        before a column existed read as NULL. Off by default — the merge
+        pass reads every footer, which is a real cost on a 100 TB table;
+        flip it only for tables that actually evolve.
 
         A table migrated to the merge-on-read layout is read through
         ``mor_read`` — every stage (marts/dq/publish/report) sees the
@@ -117,10 +171,18 @@ class TableStore:
             if schema is None:
                 raise FileNotFoundError(self.path(name))
             return self.spark.createDataFrame([], schema)
-        reader = self.spark.read
         if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(self.path(name))
+            return self.spark.read.option("mergeSchema", "true").parquet(self.path(name))
+        return self._parquet(self.path(name))
+
+    def _parquet(self, path: str) -> DataFrame:
+        """Read the parquet dir ``path`` under its sidecar schema, or infer
+        the schema when it has no sidecar."""
+        info = _read_schema(path)
+        if info is None:
+            return self.spark.read.parquet(path)
+        st = StructType.fromJson(json.loads(info["schema"]))
+        return self.spark.read.schema(st).parquet(path)
 
     def write(
         self,
@@ -132,8 +194,14 @@ class TableStore:
         """At 100 TB, pass partition_by=('source',) (or ingest date): writes
         become partition-scoped, incremental scans prune partitions, and
         with spark.sql.sources.partitionOverwriteMode=dynamic a merge
-        rewrites only the partitions it touched."""
-        _repair(self.path(name))
+        rewrites only the partitions it touched.
+
+        An overwrite, or the append that creates the table, writes the
+        ``_SCHEMA.json`` sidecar after the data. An append whose schema
+        differs from the sidecar drops it before writing, and partitioned
+        writes keep none: those tables infer their schema at read."""
+        path = self.path(name)
+        _repair(path)
         if self.mor_exists(name):
             # a plain parquet write next to a MOR layout would be INVISIBLE
             # (read() prefers the merged view) — route or refuse, never fork
@@ -145,11 +213,17 @@ class TableStore:
                 "mor_upsert (append) or rewrite/mor_compact (rewrite); a "
                 "direct parquet write would be invisible to readers"
             )
+        fresh = mode == "overwrite" or not self.exists(name)
+        side = None if partition_by else _nullable(df.schema).json()
+        if fresh or (_read_schema(path) or {}).get("schema") != side:
+            _drop_schema(path)
         w = df.write.mode(mode)
         if partition_by:
             w = w.partitionBy(*partition_by)
-        w.parquet(self.path(name))
-        self.spark.catalog.refreshByPath(self.path(name))
+        w.parquet(path)
+        if fresh and side is not None:
+            _write_schema(path, df.schema)
+        self.spark.catalog.refreshByPath(path)
 
     def overwrite_partitions(
         self, name: str, df: DataFrame, partition_by: Sequence[str]
@@ -171,6 +245,7 @@ class TableStore:
                 "scoped overwrite would fork an invisible COW copy — land "
                 "the patch as a delta (mor_upsert) instead"
             )
+        _drop_schema(self.path(name))  # partitioned tables keep no sidecar
         conf = self.spark.conf
         prev = conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
         conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -184,9 +259,10 @@ class TableStore:
 
     def rewrite(self, name: str, df: DataFrame) -> None:
         """Safe read-modify-write: materialize to a temp dir first (the
-        plan reads the files being replaced), then ``_swap`` it in.
-        refreshByPath invalidates Spark's cached file listing — without it
-        later scans chase deleted part files.
+        plan reads the files being replaced), write the ``_SCHEMA.json``
+        sidecar into it, then ``_swap`` it in, so data and schema commit
+        in one rename. refreshByPath invalidates Spark's cached file
+        listing — without it later scans chase deleted part files.
 
         A merge-on-read table stays MOR: the rewrite becomes a base
         replacement (the new frame already incorporates the deltas — it
@@ -213,10 +289,15 @@ class TableStore:
                 if mor:
                     locks.enter_context(self._mor_writer_lock(name))
                     tmp = self._mor_dir(name, "base._tmp")
-                    self._mor_write_base(name, df, tmp, self._mor_meta(name))
+                    # df was read through the merged view: the new base
+                    # holds every live delta
+                    live = self.mor_deltas(name)
+                    folded = live[-1] if live else self._mor_folded(name)
+                    self._mor_write_base(name, df, tmp, self._mor_meta(name), folded)
                 else:
                     tmp = self.path(f"__tmp_{name}")
                     df.write.mode("overwrite").parquet(tmp)
+                    _write_schema(tmp, df.schema)
                     self.spark.catalog.refreshByPath(tmp)
                 staged[name] = (tmp, mor)
             for name, (tmp, mor) in staged.items():
@@ -346,7 +427,9 @@ class TableStore:
             F.xxhash64(*[F.col(k) for k in meta["keys"]]), F.lit(meta["buckets"])
         )
 
-    def _mor_write_base(self, name: str, df: DataFrame, dest: str, meta: dict) -> None:
+    def _mor_write_base(
+        self, name: str, df: DataFrame, dest: str, meta: dict, folded: int = 0
+    ) -> None:
         """Materialize a (new) base under the table's layout: bucketed
         tables hash-partition by ``_bucket`` (one dir per touched bucket,
         repartitioned so each bucket lands as ~one file), plain tables
@@ -358,7 +441,8 @@ class TableStore:
         data and schema atomically: a crash between the swap and the
         _META convenience update can no longer leave new base files read
         under a stale explicit schema (added columns vanishing, dropped
-        columns reading as null)."""
+        columns reading as null). The sidecar also records ``folded``, the
+        newest delta seq the base already holds (see ``mor_deltas``)."""
         if meta.get("buckets"):
             (
                 df.withColumn("_bucket", self._mor_bucket_expr(meta))
@@ -369,8 +453,7 @@ class TableStore:
             )
         else:
             df.write.mode("overwrite").parquet(dest)
-        with open(os.path.join(dest, "_SCHEMA.json"), "w") as f:
-            json.dump({"columns": list(df.columns), "schema": df.schema.json()}, f)
+        _write_schema(dest, df.schema, folded=folded)
         self.spark.catalog.refreshByPath(dest)
 
     def _mor_base_info(self, name: str, meta: dict) -> dict:
@@ -378,12 +461,16 @@ class TableStore:
         in-base ``_SCHEMA.json`` sidecar when present (committed atomically
         WITH the data by the base-swap rename), else the _META copy
         (pre-sidecar tables)."""
-        side = self._mor_dir(name, "base", "_SCHEMA.json")
-        try:
-            with open(side) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"columns": meta.get("columns"), "schema": meta.get("schema")}
+        return _read_schema(self._mor_dir(name, "base")) or {
+            "columns": meta.get("columns"),
+            "schema": meta.get("schema"),
+        }
+
+    def _mor_folded(self, name: str) -> int:
+        """The newest delta seq the base holds (0 before any fold)."""
+        base = self._mor_dir(name, "base")
+        _repair(base)
+        return (_read_schema(base) or {}).get("folded", 0)
 
     def mor_init(
         self,
@@ -495,7 +582,8 @@ class TableStore:
             meta["policy"] = normalize_policy(policy)
             _write_atomic(self._mor_dir(name, "_META"), json.dumps(meta))
 
-    def mor_deltas(self, name: str) -> list[int]:
+    def _mor_delta_dirs(self, name: str) -> list[int]:
+        """Seqs of every registered delta dir, folded ones included."""
         import glob
 
         return sorted(
@@ -504,7 +592,18 @@ class TableStore:
             if os.path.basename(d).isdigit()
         )
 
-    def mor_upsert(self, name: str, df: DataFrame, classes: dict | None = None) -> int:
+    def mor_deltas(self, name: str) -> list[int]:
+        """Seqs of the live deltas, oldest first. A delta at or below the
+        base's ``folded`` seq is already in the base: a rewrite or a
+        compaction swapped the base in and crashed before deleting it.
+        Reads skip it, so its pre-rewrite values never fold over the new
+        base; the next upsert deletes it."""
+        folded = self._mor_folded(name)
+        return [s for s in self._mor_delta_dirs(name) if s > folded]
+
+    def mor_upsert(
+        self, name: str, df: DataFrame, classes: dict | None = None
+    ) -> int | None:
         """Single-writer-locked entry point for ``_mor_upsert_locked``
         (the concurrency contract lives on ``_mor_writer_lock``)."""
         with self._mor_writer_lock(name):
@@ -512,8 +611,9 @@ class TableStore:
 
     def _mor_upsert_locked(
         self, name: str, df: DataFrame, classes: dict | None = None
-    ) -> int:
-        """Land one batch as the next delta. Rows may carry a boolean
+    ) -> int | None:
+        """Land one batch as the next delta and return its seq; an empty
+        batch registers no delta and returns None. Rows may carry a boolean
         ``_deleted`` tombstone column; within a batch the caller provides
         at most one row per key (the batch is a statement, not a log) —
         ENFORCED after the delta materializes: duplicate keys would make
@@ -531,12 +631,13 @@ class TableStore:
         policy's class.
 
         Crash contract: the batch lands in ``delta/<seq>.tmp.<pid>``
-        (invisible to ``mor_deltas``), is validated, gets its
-        ``_CLASSES.json`` sidecar, and registers via one atomic rename —
-        a crash anywhere before the rename leaves no half-visible delta,
-        and the next writer sweeps the debris (own-pid-dead check only;
-        see the sweep comment below). Concurrency: single-writer, lock-
-        enforced (``_mor_writer_lock``)."""
+        (invisible to ``mor_deltas``), gets its ``_SCHEMA.json`` sidecar
+        (so neither the check below nor a read infers its schema), is
+        validated, gets its ``_CLASSES.json`` sidecar, and registers via
+        one atomic rename — a crash anywhere before the rename leaves no
+        half-visible delta, and the next writer sweeps the debris
+        (own-pid-dead check only; see the sweep comment below).
+        Concurrency: single-writer, lock-enforced (``_mor_writer_lock``)."""
         meta = self._mor_meta(name)
         keys = meta["keys"]
         # a column the base lacks would land and then vanish at read (reads
@@ -562,7 +663,13 @@ class TableStore:
                 raise ValueError(f"classes name columns absent from the batch: {sorted(missing)}")
             if set(named) & set(keys):
                 raise ValueError("key columns cannot be classified")
-        seq = (self.mor_deltas(name) or [0])[-1] + 1
+        # numbering continues past the folded seq, so a new delta is never
+        # mistaken for one the base already holds
+        folded, dirs = self._mor_folded(name), self._mor_delta_dirs(name)
+        seq = max(dirs + [folded]) + 1
+        for s in dirs:
+            if s <= folded:  # debris of a crashed rewrite/compaction
+                shutil.rmtree(self._mor_dir(name, "delta", str(s)), ignore_errors=True)
         final = self._mor_dir(name, "delta", str(seq))
         # pid-stamped tmp: defense-in-depth under the writer lock — even a
         # writer that bypasses the lock (older code, operator error) can't
@@ -585,11 +692,13 @@ class TableStore:
                     continue  # exists under another uid — leave it
             shutil.rmtree(stale, ignore_errors=True)
         df.write.mode("overwrite").parquet(tmp)
+        _write_schema(tmp, df.schema)
         # check the LANDED files, not df's lineage: one cheap key-column
         # scan (column pruning) instead of recomputing an arbitrary plan.
         # Distinct over a STRUCT of the keys: the struct is non-null even
-        # when a key field is null, so null-keyed rows count too.
-        landed = self.spark.read.parquet(tmp)
+        # when a key field is null, so null-keyed rows count too. The same
+        # aggregate counts the batch, so an empty one costs no extra job.
+        landed = self._parquet(tmp)
         null_key = None
         for k in keys:
             c = F.col(k).isNull()
@@ -600,7 +709,11 @@ class TableStore:
                 - F.count_distinct(F.struct(*[F.col(k) for k in keys]))
             ).alias("d"),
             F.count(F.when(null_key, 1)).alias("nk"),
+            F.count(F.lit(1)).alias("n"),
         ).collect()[0]
+        if not checks["n"]:  # an empty batch must not grow the delta chain
+            shutil.rmtree(tmp, ignore_errors=True)
+            return None
         if checks["d"] or checks["nk"]:
             shutil.rmtree(tmp, ignore_errors=True)
             if checks["nk"]:
@@ -690,7 +803,7 @@ class TableStore:
         carried: dict[int, list[str]] = {}  # seq -> data columns the statement carries
         overrides: dict[int, dict] = {}  # seq -> per-statement class overrides
         for s in seqs:
-            d = self.spark.read.parquet(self._mor_dir(name, "delta", str(s)))
+            d = self._parquet(self._mor_dir(name, "delta", str(s)))
             carried[s] = [c for c in d.columns if c not in keys and c != "_deleted"]
             side = self._mor_dir(name, "delta", str(s), "_CLASSES.json")
             if os.path.exists(side):
@@ -731,9 +844,10 @@ class TableStore:
     def _mor_swap_base(self, name: str, tmp: str) -> None:
         """``_swap`` a fully-written replacement base in and clear the
         delta stack (the replacement was computed FROM the merged view, so
-        the deltas are now folded in)."""
+        the deltas are now folded in; the new base's ``folded`` seq hides
+        any the crash of this loop leaves behind)."""
         _swap(self._mor_dir(name, "base"), tmp)
-        for s in self.mor_deltas(name):
+        for s in self._mor_delta_dirs(name):
             shutil.rmtree(self._mor_dir(name, "delta", str(s)), ignore_errors=True)
         self.spark.catalog.refreshByPath(self._mor_dir(name, "base"))
 
@@ -813,7 +927,7 @@ class TableStore:
         meta = self._mor_meta(name)
         tmp = self._mor_dir(name, "base._tmp")
         if not meta.get("buckets"):
-            self._mor_write_base(name, self.mor_read(name), tmp, meta)
+            self._mor_write_base(name, self.mor_read(name), tmp, meta, seqs[-1])
             self._mor_swap_base(name, tmp)
             return len(seqs)
 
@@ -822,7 +936,7 @@ class TableStore:
         # the collect is bounded by the bucket count, never by data size
         dk = None
         for s in seqs:
-            d = self.spark.read.parquet(self._mor_dir(name, "delta", str(s))).select(*keys)
+            d = self._parquet(self._mor_dir(name, "delta", str(s))).select(*keys)
             dk = d if dk is None else dk.unionByName(d)
         touched = sorted(
             r["b"]

@@ -194,9 +194,10 @@ def test_normalize_writeback_via_mor(spark):
     assert st.where(F.col("seniority_enrichment_status") == "not_tried").count() == 0
 
     # layout invariants: enrich's rewrite replaced the base and cleared
-    # deltas; the two post-enrich batches are deltas 1-2; the base files
-    # were never touched by a delta write; the stale COW files are gone
-    assert mor.mor_deltas("staging_job_postings") == [1, 2]
+    # deltas; the two post-enrich batches are deltas 2-3 (numbering runs
+    # past delta 1, which the rewritten base holds); the base files were
+    # never touched by a delta write; the stale COW files are gone
+    assert mor.mor_deltas("staging_job_postings") == [2, 3]
     assert not glob.glob(os.path.join(mor.path("staging_job_postings"), "*.parquet"))
     base_glob = os.path.join(
         mor.path("staging_job_postings"), "_mor", "base", "*.parquet"
@@ -207,7 +208,7 @@ def test_normalize_writeback_via_mor(spark):
     run_normalize(
         mor, MockAdapter(), min_collected_at=dt.datetime(2030, 1, 1), run_ts=ts3, mor=True
     )
-    assert mor.mor_deltas("staging_job_postings") == [1, 2]
+    assert mor.mor_deltas("staging_job_postings") == [2, 3]
 
     # compaction folds the policy deltas; the merged view is unchanged
     before = canon(mor)

@@ -119,3 +119,33 @@ def test_crash_at_every_rename_reads_pre_or_post_state(spark, tmp_path, monkeypa
         for t in tables:
             assert got[t][0] > 0, (case, k, t, "read empty")
             assert got[t] in (pre[t], post[t]), (case, k, t, got[t], pre[t], post[t])
+
+
+def test_crash_in_delta_cleanup_after_mor_rewrite_reads_post_state(spark, tmp_path, monkeypatch):
+    """A merge-on-read ``rewrite`` swaps in a base that already holds the
+    deltas' values, then deletes the deltas. A crash inside that delete
+    leaves deltas next to a base that folded them: a fresh store must not
+    fold their pre-rewrite values over the new base, and the next upsert
+    must land past them."""
+    root = str(tmp_path / "wh")
+    _setup_mor(TableStore(spark, root))  # k 0..19 v=id, then delta k 15..24 v=id*100
+    real_rmtree = shutil.rmtree
+
+    def rmtree(path, *a, **k):
+        if os.sep + "delta" + os.sep in str(path):
+            raise _Crash(path)
+        real_rmtree(path, *a, **k)
+
+    with monkeypatch.context() as m:
+        m.setattr(shutil, "rmtree", rmtree)
+        store = TableStore(spark, root)
+        with pytest.raises(_Crash):
+            store.rewrite("t", _bump(store, "t"))
+
+    def rows():
+        return {r["k"]: r["v"] for r in TableStore(spark, root).read("t").collect()}
+
+    post = {str(i): (i * 100 if i >= 15 else i) + 1 for i in range(25)}
+    assert rows() == post
+    _upsert(TableStore(spark, root), "t", 30, 31)
+    assert rows() == {**post, "30": 3000}
