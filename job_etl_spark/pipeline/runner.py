@@ -152,10 +152,11 @@ def run_enrich(
     merge-on-read delta carrying just (hash_key, skills_raw,
     seniority_level, seniority_enrichment_status) with OVERWRITE
     per-statement classes — the staging policy keeps those columns
-    keep-first for normalize statements, so the delta's _CLASSES sidecar
-    overrides them for this statement only. Write cost O(pending), never
-    O(table); the read folds mixed normalize/enrich statements through
-    ``merge_statements`` bit-identically to the COW chain."""
+    keep-first for normalize statements, so the classes recorded in the
+    delta's schema sidecar override them for this statement only. Write
+    cost O(pending), never O(table); the read folds mixed normalize/enrich
+    statements through ``merge_statements`` bit-identically to the COW
+    chain."""
     run_ts = run_ts or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     # a dry run must not mutate ANYTHING, the layout included
     if mor and not dry_run:
@@ -277,10 +278,9 @@ def _ensure_fact_mor(store: TableStore, buckets: int | None) -> None:
     """One shared fact_jobs MOR table spec for every writer (marts
     increment + rank write-back): keyed on hash_key under
     ``fact_merge_policy`` — data columns overwrite, the rank pair
-    coalesces (the J2 carry). A table migrated latest-wins by pre-r11
-    code is upgraded in place (compact-then-set-policy), so a marts
-    delta with NULL rank columns can never be resolved wholesale and
-    silently null out landed scores."""
+    coalesces (the J2 carry). A MOR fact_jobs without that policy is
+    refused: latest-wins would resolve a marts delta's NULL rank columns
+    wholesale and silently null out landed scores."""
     from job_etl_spark.pipeline.marts import fact_merge_policy
 
     if not store.mor_exists("fact_jobs"):
@@ -292,7 +292,7 @@ def _ensure_fact_mor(store: TableStore, buckets: int | None) -> None:
             buckets=buckets,
         )
     elif store._mor_meta("fact_jobs").get("policy") is None:
-        store.mor_set_policy("fact_jobs", fact_merge_policy())
+        raise ValueError("MOR fact_jobs is latest-wins: marts and rank need fact_merge_policy")
 
 
 def run_marts(
@@ -355,7 +355,7 @@ def _run_marts_mor(
     mor_buckets: int | None,
     compact_every: int,
 ) -> dict:
-    from job_etl_spark.operators.watermark import high_watermark
+    from job_etl_spark.operators.watermark import EPOCH_FLOOR
     from job_etl_spark.pipeline.marts import fact_increment, fact_merge_policy
 
     stats: dict = {}
@@ -369,14 +369,23 @@ def _run_marts_mor(
         )
         stats["dim_new"] = None  # init run: the whole projection is the base
     else:
-        wm = high_watermark(store.read("dim_companies"), "created_at")
-        fresh = build_dim_companies(companies, None)
-        if wm is not None:
-            fresh = fresh.where(F.col("created_at") > F.lit(wm))
-        obs = Observation()
-        # an empty increment lands nothing
-        store.mor_upsert("dim_companies", fresh.observe(obs, F.count(F.lit(1)).alias("dim_new")))
-        stats.update(_observed(obs))
+        # one aggregate takes the dimension's watermark and the newest
+        # company, so a run with nothing newer writes no empty delta
+        created, null_ts = F.col("created_at"), F.lit(None).cast("timestamp")
+        row = (
+            store.read("dim_companies").select(created.alias("wm"), null_ts.alias("top"))
+            .unionByName(companies.select(null_ts.alias("wm"), created.alias("top")))
+            .agg(F.max("wm").alias("wm"), F.max("top").alias("top"))
+            .first()
+        )
+        wm = row["wm"] or EPOCH_FLOOR
+        if row["top"] is None or row["top"] <= wm:
+            stats["dim_new"] = 0
+        else:
+            fresh = build_dim_companies(companies, None).where(created > F.lit(wm))
+            obs = Observation()
+            store.mor_upsert("dim_companies", fresh.observe(obs, F.count(F.lit(1)).alias("dim_new")))
+            stats.update(_observed(obs))
     # -- fact_jobs: the increment as ONE delta under fact_merge_policy
     # (rank carry via the fold's COALESCE — no self-join, no base write)
     had_fact = store.exists("fact_jobs")
@@ -391,7 +400,7 @@ def _run_marts_mor(
         )
         stats["fact_new"] = None
     else:
-        _ensure_fact_mor(store, mor_buckets)  # migrate/upgrade if needed
+        _ensure_fact_mor(store, mor_buckets)  # migrate if needed
         existing = store.read("fact_jobs")
         inc, obs = fact_increment(staging, existing, run_ts), Observation()
         store.mor_upsert("fact_jobs", inc.observe(obs, F.count(F.lit(1)).alias("fact_new")))

@@ -5,10 +5,17 @@ atomic overwrite-rewrite (copy-on-write) and an LSM-style merge-on-read
 layout (immutable deltas folded at read time, compacted offline). Each
 copy-on-write table, merge-on-read base and delta carries its schema in a
 ``_SCHEMA.json`` sidecar, so reading it plans without a Spark job.
+
+A merge-on-read table keeps each fact in one file: ``_mor/_META`` holds
+what never changes (``keys``, ``policy``, ``buckets``); the base's sidecar
+holds its ``columns``, ``schema`` and ``folded`` seq and commits with the
+base; a delta's sidecar holds its schema and, for a statement with its own
+column classes, ``classes``.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -88,8 +95,9 @@ def _nullable(t: DataType) -> DataType:
 def _write_schema(dest: str, schema: StructType, **extra) -> None:
     """Record ``schema`` as the sidecar of the parquet dir ``dest``:
     ``{"columns", "schema"}`` plus ``extra`` (a MOR base's ``folded``
-    delta seq). A read with the sidecar's schema launches no Spark job;
-    without it, Spark reads a parquet footer in a one-task job."""
+    delta seq, a MOR statement's ``classes``). A read with the sidecar's
+    schema launches no Spark job; without it, Spark reads a parquet
+    footer in a one-task job."""
     info = {"columns": schema.names, "schema": _nullable(schema).json(), **extra}
     _write_atomic(os.path.join(dest, _SCHEMA), json.dumps(info))
 
@@ -101,6 +109,11 @@ def _read_schema(dest: str) -> dict | None:
             return json.load(f)
     except FileNotFoundError:
         return None
+
+
+def _struct(info: dict) -> StructType:
+    """The schema a sidecar records."""
+    return StructType.fromJson(json.loads(info["schema"]))
 
 
 def _drop_schema(dest: str) -> None:
@@ -118,6 +131,19 @@ def _write_atomic(path: str, text: str) -> None:
     with open(tmp, "w") as f:
         f.write(text)
     os.replace(tmp, path)
+
+
+def _single_writer(verb):
+    """Run the merge-on-read writer verb ``verb(self, name, ...)`` under
+    the table's writer lock (the contract lives on
+    ``TableStore._mor_writer_lock``)."""
+
+    @functools.wraps(verb)
+    def locked(self, name, *args, **kwargs):
+        with self._mor_writer_lock(name):
+            return verb(self, name, *args, **kwargs)
+
+    return locked
 
 
 class TableStore:
@@ -181,8 +207,7 @@ class TableStore:
         info = _read_schema(path)
         if info is None:
             return self.spark.read.parquet(path)
-        st = StructType.fromJson(json.loads(info["schema"]))
-        return self.spark.read.schema(st).parquet(path)
+        return self.spark.read.schema(_struct(info)).parquet(path)
 
     def write(
         self,
@@ -280,8 +305,7 @@ class TableStore:
 
     def _rewrite(self, updates: dict[str, DataFrame]) -> None:
         """Shared body of ``rewrite`` and ``rewrite_many``. A MOR table
-        holds its writer lock from its base write through the swap and
-        the _META update."""
+        holds its writer lock from its base write through the swap."""
         with ExitStack() as locks:
             staged = {}
             for name, df in updates.items():
@@ -292,8 +316,8 @@ class TableStore:
                     # df was read through the merged view: the new base
                     # holds every live delta
                     live = self.mor_deltas(name)
-                    folded = live[-1] if live else self._mor_folded(name)
-                    self._mor_write_base(name, df, tmp, self._mor_meta(name), folded)
+                    folded = live[-1] if live else self._mor_base_info(name)["folded"]
+                    self._mor_write_base(df, tmp, self._mor_meta(name), folded)
                 else:
                     tmp = self.path(f"__tmp_{name}")
                     df.write.mode("overwrite").parquet(tmp)
@@ -303,7 +327,6 @@ class TableStore:
             for name, (tmp, mor) in staged.items():
                 if mor:
                     self._mor_swap_base(name, tmp)
-                    self._mor_update_columns(name, updates[name])
                 else:
                     _swap(self.path(name), tmp)
                     self.spark.catalog.refreshByPath(self.path(name))
@@ -382,6 +405,8 @@ class TableStore:
         return os.path.join(self.path(name), "_mor", *parts)
 
     def _mor_meta(self, name: str) -> dict:
+        """What never changes about the table: ``keys``, plus ``policy``
+        and ``buckets`` when it has them."""
         with open(self._mor_dir(name, "_META")) as f:
             return json.load(f)
 
@@ -428,21 +453,18 @@ class TableStore:
         )
 
     def _mor_write_base(
-        self, name: str, df: DataFrame, dest: str, meta: dict, folded: int = 0
+        self, df: DataFrame, dest: str, meta: dict, folded: int = 0
     ) -> None:
         """Materialize a (new) base under the table's layout: bucketed
         tables hash-partition by ``_bucket`` (one dir per touched bucket,
         repartitioned so each bucket lands as ~one file), plain tables
         write flat.
 
-        The authoritative column list + schema ride INSIDE the base dir
-        as a ``_SCHEMA.json`` sidecar (underscore prefix — invisible to
-        Spark's file listing), so the single base-swap rename publishes
-        data and schema atomically: a crash between the swap and the
-        _META convenience update can no longer leave new base files read
-        under a stale explicit schema (added columns vanishing, dropped
-        columns reading as null). The sidecar also records ``folded``, the
-        newest delta seq the base already holds (see ``mor_deltas``)."""
+        The base's ``_SCHEMA.json`` sidecar is the one home of its column
+        list and schema, and of ``folded``, the newest delta seq the base
+        already holds (see ``mor_deltas``). It rides INSIDE the base dir
+        (underscore prefix — invisible to Spark's file listing), so the
+        single base-swap rename publishes data and schema atomically."""
         if meta.get("buckets"):
             (
                 df.withColumn("_bucket", self._mor_bucket_expr(meta))
@@ -456,36 +478,16 @@ class TableStore:
         _write_schema(dest, df.schema, folded=folded)
         self.spark.catalog.refreshByPath(dest)
 
-    def _mor_base_info(self, name: str, meta: dict) -> dict:
-        """Resolve the base's authoritative ``{"columns", "schema"}``: the
-        in-base ``_SCHEMA.json`` sidecar when present (committed atomically
-        WITH the data by the base-swap rename), else the _META copy
-        (pre-sidecar tables)."""
-        return _read_schema(self._mor_dir(name, "base")) or {
-            "columns": meta.get("columns"),
-            "schema": meta.get("schema"),
-        }
-
-    def _mor_folded(self, name: str) -> int:
-        """The newest delta seq the base holds (0 before any fold)."""
+    def _mor_base_info(self, name: str) -> dict:
+        """The base's sidecar, ``{"columns", "schema", "folded"}``.
+        Opening it first settles an interrupted base swap."""
         base = self._mor_dir(name, "base")
         _repair(base)
-        return (_read_schema(base) or {}).get("folded", 0)
+        with open(os.path.join(base, _SCHEMA)) as f:
+            return json.load(f)
 
+    @_single_writer
     def mor_init(
-        self,
-        name: str,
-        df: DataFrame,
-        keys: Sequence[str],
-        policy: dict | None = None,
-        buckets: int | None = None,
-    ) -> None:
-        """Single-writer-locked entry point for ``_mor_init_locked``
-        (the concurrency contract lives on ``_mor_writer_lock``)."""
-        with self._mor_writer_lock(name):
-            self._mor_init_locked(name, df, keys, policy, buckets)
-
-    def _mor_init_locked(
         self,
         name: str,
         df: DataFrame,
@@ -521,26 +523,20 @@ class TableStore:
         Migrating a COW table (the usual first call passes
         ``store.read(name)``) deletes the stale top-level COW files after
         the base materializes, so nothing can silently read pre-migration
-        data through a direct parquet path."""
+        data through a direct parquet path. Single-writer: the call holds
+        the table's writer lock (``_mor_writer_lock``)."""
         if "_deleted" in df.columns:
             df = df.where(~F.coalesce(F.col("_deleted"), F.lit(False))).drop(
                 "_deleted"
             )
-        meta: dict = {
-            "keys": list(keys),
-            "columns": list(df.columns),
-            # the authoritative base schema: bucketed bases NEED it (an
-            # empty partitionBy write leaves no footer to infer from) and
-            # every read skips footer inference with it
-            "schema": df.schema.json(),
-        }
+        meta: dict = {"keys": list(keys)}
         if policy is not None:
             meta["policy"] = normalize_policy(policy)
         if buckets:
             if "_bucket" in df.columns:
                 raise ValueError("'_bucket' is reserved for the bucketed MOR layout")
             meta["buckets"] = int(buckets)
-        self._mor_write_base(name, df, self._mor_dir(name, "base"), meta)
+        self._mor_write_base(df, self._mor_dir(name, "base"), meta)
         os.makedirs(self._mor_dir(name, "delta"), exist_ok=True)
         _write_atomic(self._mor_dir(name, "_META"), json.dumps(meta))
         # the base write above already materialized everything it read.
@@ -560,28 +556,6 @@ class TableStore:
                 os.remove(full)
         self.spark.catalog.refreshByPath(self.path(name))
 
-    def mor_set_policy(self, name: str, policy: dict) -> None:
-        """Upgrade a latest-wins MOR table to a policy table (e.g. a
-        fact_jobs migrated before the marts stage learned MOR). The
-        existing delta stack folds into the base FIRST, under the
-        semantics it was written with (latest-wins), so the policy only
-        ever governs deltas landed after the upgrade — no historical
-        statement is reinterpreted. Changing an EXISTING policy is
-        refused: old deltas' classes would silently change meaning
-        (per-statement overrides are the supported path for that)."""
-        with self._mor_writer_lock(name):
-            meta = self._mor_meta(name)
-            if meta.get("policy") is not None:
-                if meta["policy"] == normalize_policy(policy):
-                    return
-                raise ValueError(
-                    f"MOR table {name!r} already has a different policy; "
-                    "reinterpreting landed deltas is not supported"
-                )
-            self._mor_compact_locked(name)
-            meta["policy"] = normalize_policy(policy)
-            _write_atomic(self._mor_dir(name, "_META"), json.dumps(meta))
-
     def _mor_delta_dirs(self, name: str) -> list[int]:
         """Seqs of every registered delta dir, folded ones included."""
         import glob
@@ -595,21 +569,14 @@ class TableStore:
     def mor_deltas(self, name: str) -> list[int]:
         """Seqs of the live deltas, oldest first. A delta at or below the
         base's ``folded`` seq is already in the base: a rewrite or a
-        compaction swapped the base in and crashed before deleting it.
-        Reads skip it, so its pre-rewrite values never fold over the new
-        base; the next upsert deletes it."""
-        folded = self._mor_folded(name)
+        compaction recorded its fold point and crashed before deleting
+        it. Reads skip it, so its pre-rewrite values never fold over the
+        new base; the next upsert deletes it."""
+        folded = self._mor_base_info(name)["folded"]
         return [s for s in self._mor_delta_dirs(name) if s > folded]
 
+    @_single_writer
     def mor_upsert(
-        self, name: str, df: DataFrame, classes: dict | None = None
-    ) -> int | None:
-        """Single-writer-locked entry point for ``_mor_upsert_locked``
-        (the concurrency contract lives on ``_mor_writer_lock``)."""
-        with self._mor_writer_lock(name):
-            return self._mor_upsert_locked(name, df, classes)
-
-    def _mor_upsert_locked(
         self, name: str, df: DataFrame, classes: dict | None = None
     ) -> int | None:
         """Land one batch as the next delta and return its seq; an empty
@@ -632,25 +599,24 @@ class TableStore:
 
         Crash contract: the batch lands in ``delta/<seq>.tmp.<pid>``
         (invisible to ``mor_deltas``), gets its ``_SCHEMA.json`` sidecar
-        (so neither the check below nor a read infers its schema), is
-        validated, gets its ``_CLASSES.json`` sidecar, and registers via
-        one atomic rename — a crash anywhere before the rename leaves no
-        half-visible delta, and the next writer sweeps the debris
+        (its schema and the statement's ``classes``, so neither the check
+        below nor a read opens anything else), is validated, and registers
+        via one atomic rename — a crash anywhere before the rename leaves
+        no half-visible delta, and the next writer sweeps the debris
         (own-pid-dead check only; see the sweep comment below).
         Concurrency: single-writer, lock-enforced (``_mor_writer_lock``)."""
         meta = self._mor_meta(name)
         keys = meta["keys"]
+        base = self._mor_base_info(name)
         # a column the base lacks would land and then vanish at read (reads
         # keep the base columns only) — refuse it before anything is
-        # written. The sidecar is the base's authoritative column list.
-        base_cols = self._mor_base_info(name, meta).get("columns")
-        if base_cols is not None:
-            unknown = [c for c in df.columns if c not in base_cols and c != "_deleted"]
-            if unknown:
-                raise ValueError(
-                    f"mor_upsert({name!r}): batch carries columns absent from "
-                    f"the base schema: {unknown}"
-                )
+        # written
+        unknown = [c for c in df.columns if c not in base["columns"] and c != "_deleted"]
+        if unknown:
+            raise ValueError(
+                f"mor_upsert({name!r}): batch carries columns absent from "
+                f"the base schema: {unknown}"
+            )
         if classes is not None:
             if meta.get("policy") is None:
                 raise ValueError(
@@ -665,7 +631,7 @@ class TableStore:
                 raise ValueError("key columns cannot be classified")
         # numbering continues past the folded seq, so a new delta is never
         # mistaken for one the base already holds
-        folded, dirs = self._mor_folded(name), self._mor_delta_dirs(name)
+        folded, dirs = base["folded"], self._mor_delta_dirs(name)
         seq = max(dirs + [folded]) + 1
         for s in dirs:
             if s <= folded:  # debris of a crashed rewrite/compaction
@@ -674,8 +640,8 @@ class TableStore:
         # pid-stamped tmp: defense-in-depth under the writer lock — even a
         # writer that bypasses the lock (older code, operator error) can't
         # have its in-flight dir swept, because the sweep only removes tmp
-        # dirs whose stamped owner process is DEAD (plus pre-r11 unstamped
-        # ones, which no live writer can own under this code).
+        # dirs whose stamped owner process is DEAD (plus unstamped ones,
+        # which no live writer can own under this code).
         tmp = f"{final}.tmp.{os.getpid()}"
         import glob as _glob
 
@@ -692,7 +658,8 @@ class TableStore:
                     continue  # exists under another uid — leave it
             shutil.rmtree(stale, ignore_errors=True)
         df.write.mode("overwrite").parquet(tmp)
-        _write_schema(tmp, df.schema)
+        own = {"classes": {k: sorted(v) for k, v in classes.items() if v}} if classes else {}
+        _write_schema(tmp, df.schema, **own)
         # check the LANDED files, not df's lineage: one cheap key-column
         # scan (column pruning) instead of recomputing an arbitrary plan.
         # Distinct over a STRUCT of the keys: the struct is non-null even
@@ -728,9 +695,6 @@ class TableStore:
                 f"mor_upsert({name!r}): batch has {checks['d']} duplicate key "
                 "row(s); a delta is a statement (at most one row per key per batch)"
             )
-        if classes is not None:
-            with open(os.path.join(tmp, "_CLASSES.json"), "w") as f:
-                json.dump({k: sorted(v) for k, v in classes.items() if v}, f)
         os.rename(tmp, final)
         return seq
 
@@ -751,9 +715,6 @@ class TableStore:
         base."""
         meta = self._mor_meta(name)
         base = self._mor_read_base(name, meta)
-        if meta.get("buckets"):
-            # the partition column is a layout detail, not table schema
-            base = base.select(*self._mor_base_info(name, meta)["columns"])
         seqs = self.mor_deltas(name)
         if not seqs:
             return base
@@ -803,12 +764,11 @@ class TableStore:
         carried: dict[int, list[str]] = {}  # seq -> data columns the statement carries
         overrides: dict[int, dict] = {}  # seq -> per-statement class overrides
         for s in seqs:
-            d = self._parquet(self._mor_dir(name, "delta", str(s)))
+            path = self._mor_dir(name, "delta", str(s))
+            info = _read_schema(path)
+            d = self.spark.read.schema(_struct(info)).parquet(path)
             carried[s] = [c for c in d.columns if c not in keys and c != "_deleted"]
-            side = self._mor_dir(name, "delta", str(s), "_CLASSES.json")
-            if os.path.exists(side):
-                with open(side) as f:
-                    overrides[s] = json.load(f)
+            overrides[s] = info.get("classes", {})
             if "_deleted" not in d.columns:
                 d = d.withColumn("_deleted", F.lit(False))
             d = d.withColumn("_seq", F.lit(s))
@@ -823,7 +783,7 @@ class TableStore:
 
             table, base_cols, classes = by_column(policy), set(base.columns), {}
             for s in seqs:
-                own = by_column(overrides.get(s, {}))
+                own = by_column(overrides[s])
                 classes[s] = {
                     c: own.get(c, table.get(c, "keep_first"))
                     for c in carried[s]
@@ -847,54 +807,40 @@ class TableStore:
         the deltas are now folded in; the new base's ``folded`` seq hides
         any the crash of this loop leaves behind)."""
         _swap(self._mor_dir(name, "base"), tmp)
+        self._mor_drop_deltas(name)
+
+    def _mor_drop_deltas(self, name: str) -> None:
+        """Delete every delta dir once the base records them as folded,
+        then drop Spark's cached listing of the changed base."""
         for s in self._mor_delta_dirs(name):
             shutil.rmtree(self._mor_dir(name, "delta", str(s)), ignore_errors=True)
         self.spark.catalog.refreshByPath(self._mor_dir(name, "base"))
 
-    def _mor_update_columns(self, name: str, df: DataFrame) -> None:
-        """Record a base schema change (a stage-level rewrite may add or
-        drop columns); atomic pointer-style _META replace."""
-        meta = self._mor_meta(name)
-        schema_json = df.schema.json()
-        if meta.get("columns") == list(df.columns) and meta.get("schema") == schema_json:
-            return
-        meta["columns"] = list(df.columns)
-        meta["schema"] = schema_json
-        _write_atomic(self._mor_dir(name, "_META"), json.dumps(meta))
-
-    def _mor_read_base(self, name: str, meta: dict) -> DataFrame:
-        """Base scan under the table's layout. The explicit schema is
-        authoritative when present (the in-base ``_SCHEMA.json`` sidecar,
-        falling back to _META for pre-sidecar tables): an EMPTY bucketed
+    def _mor_read_base(
+        self, name: str, meta: dict, buckets: list[int] | None = None
+    ) -> DataFrame:
+        """Base scan under the base sidecar's schema: an EMPTY bucketed
         base has no parquet footer to infer from (partitionBy writes no
-        files for zero rows), and explicit schemas skip footer inference
-        everywhere else. The ``_bucket`` partition column is appended for
-        bucketed layouts so compaction can prune on it; plain reads
-        select it away. Opening the base first settles any interrupted
-        base or bucket ``_swap``."""
-        from pyspark.sql.types import LongType, StructField, StructType
-
+        files for zero rows), and the explicit schema spares every other
+        read its footer job. A bucketed base reads its ``_bucket``
+        partition column, keeps only ``buckets`` when given (partition
+        pruning for compaction), then drops it: the column is a layout
+        detail, not table schema. Opening the base first settles any
+        interrupted base or bucket ``_swap``."""
         basedir = self._mor_dir(name, "base")
-        _repair(basedir)
-        if meta.get("buckets"):
-            for e in os.listdir(basedir):
-                if e.startswith(_OLD):
-                    _repair(os.path.join(basedir, e[len(_OLD) :]))
-        schema_json = self._mor_base_info(name, meta).get("schema")
-        if schema_json is None:  # pre-r10 table: infer as before
-            return self.spark.read.parquet(basedir)
-        st = StructType.fromJson(json.loads(schema_json))
-        if meta.get("buckets"):
-            st = StructType(st.fields + [StructField("_bucket", LongType())])
-        return self.spark.read.schema(st).parquet(basedir)
+        st = _struct(self._mor_base_info(name))
+        if not meta.get("buckets"):
+            return self.spark.read.schema(st).parquet(basedir)
+        for e in os.listdir(basedir):
+            if e.startswith(_OLD):
+                _repair(os.path.join(basedir, e[len(_OLD) :]))
+        base = self.spark.read.schema(st.add("_bucket", "long")).parquet(basedir)
+        if buckets is not None:
+            base = base.where(F.col("_bucket").isin([int(b) for b in buckets]))
+        return base.drop("_bucket")
 
+    @_single_writer
     def mor_compact(self, name: str) -> int:
-        """Single-writer-locked entry point for ``_mor_compact_locked``
-        (the concurrency contract lives on ``_mor_writer_lock``)."""
-        with self._mor_writer_lock(name):
-            return self._mor_compact_locked(name)
-
-    def _mor_compact_locked(self, name: str) -> int:
         """Fold the delta stack into the base; returns the number of
         deltas folded. Readers before the swap see the old base+deltas,
         after it the new base — both are the same merged view.
@@ -905,10 +851,13 @@ class TableStore:
         rewrite is the dominant write cost, while touched buckets track
         the delta key set, not the table. Every bucket commits through
         ``_swap``; a crash at any point is repaired by ``_repair`` (run
-        before every read), and because each delta is a merge STATEMENT
-        the fold is idempotent over its own result — re-applying the
-        surviving deltas to an already-compacted bucket reproduces the
-        same rows.
+        before every read). After the last bucket swap the base sidecar
+        records ``folded``, before any delta is deleted, exactly as a
+        flat swap does. A crash before that record leaves the deltas live,
+        and because each delta is a merge STATEMENT the fold is idempotent
+        over its own result — re-applying them to an already-compacted
+        bucket reproduces the same rows. A crash after it leaves deltas
+        that reads skip and the next upsert deletes.
 
         Concurrency contract (matches the enrich-stage ordering comment
         for the flat path): compaction is CRASH-safe but not concurrent-
@@ -927,7 +876,7 @@ class TableStore:
         meta = self._mor_meta(name)
         tmp = self._mor_dir(name, "base._tmp")
         if not meta.get("buckets"):
-            self._mor_write_base(name, self.mor_read(name), tmp, meta, seqs[-1])
+            self._mor_write_base(self.mor_read(name), tmp, meta, seqs[-1])
             self._mor_swap_base(name, tmp)
             return len(seqs)
 
@@ -947,10 +896,7 @@ class TableStore:
         # merged view restricted to the touched buckets: every delta key
         # hashes into one of them, so the full delta stack applies cleanly
         # to the filtered base and untouched buckets need no work at all
-        base = self._mor_read_base(name, meta)
-        base = base.where(F.col("_bucket").isin([int(b) for b in touched])).select(
-            *self._mor_base_info(name, meta)["columns"]
-        )
+        base = self._mor_read_base(name, meta, touched)
         merged = self._mor_apply_deltas(name, meta, base, seqs)
         shutil.rmtree(tmp, ignore_errors=True)
         (
@@ -960,13 +906,11 @@ class TableStore:
             .partitionBy("_bucket")
             .parquet(tmp)
         )
+        basedir = self._mor_dir(name, "base")
         for b in touched:
-            _swap(
-                self._mor_dir(name, "base", f"_bucket={b}"),
-                os.path.join(tmp, f"_bucket={b}"),
-            )
+            _swap(os.path.join(basedir, f"_bucket={b}"), os.path.join(tmp, f"_bucket={b}"))
         shutil.rmtree(tmp, ignore_errors=True)
-        for s in seqs:
-            shutil.rmtree(self._mor_dir(name, "delta", str(s)), ignore_errors=True)
-        self.spark.catalog.refreshByPath(self._mor_dir(name, "base"))
+        info = {**self._mor_base_info(name), "folded": seqs[-1]}
+        _write_atomic(os.path.join(basedir, _SCHEMA), json.dumps(info))
+        self._mor_drop_deltas(name)
         return len(seqs)

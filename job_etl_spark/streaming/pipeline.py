@@ -188,9 +188,7 @@ def foreach_batch_mor(
 
     def _upsert(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = _dedup_latest(batch_df, keys)
-        try:
-            store._mor_meta(table)
-        except FileNotFoundError:
+        if not store.mor_exists(table):
             store.mor_init(table, batch_df, keys, policy=policy)
             return
         store.mor_upsert(table, batch_df)
@@ -219,7 +217,7 @@ def foreach_batch_cms(
         sk = build_cms(batch_df, key_col, depth, width)
         if store.exists(table):
             sk = merge_cms(store.read(table), sk)
-        store.rewrite(table, sk) if store.exists(table) else store.write(table, sk)
+        store.rewrite(table, sk)
 
     return _merge
 
@@ -239,7 +237,7 @@ def foreach_batch_kmv(
         sk = kmv_sketch(batch_df, key_col, [group_col], k=k)
         if store.exists(table):
             sk = merge_kmv([group_col], k, store.read(table), sk)
-        store.rewrite(table, sk) if store.exists(table) else store.write(table, sk)
+        store.rewrite(table, sk)
 
     return _merge
 
@@ -308,16 +306,8 @@ def foreach_batch_lsh_neardup(
             dup_ids = within if dup_ids is None else dup_ids.union(within).distinct()
             accepted = batch_df.join(dup_ids, id_col, "left_anti").localCheckpoint()
             new_bands = bands.join(accepted.select(id_col), id_col).localCheckpoint()
-            store.write(
-                accepted_table,
-                accepted,
-                mode="append" if store.exists(accepted_table) else "overwrite",
-            )
-            store.write(
-                bands_table,
-                new_bands,
-                mode="append" if store.exists(bands_table) else "overwrite",
-            )
+            store.write(accepted_table, accepted, mode="append")
+            store.write(bands_table, new_bands, mode="append")
             if compact_every and batch_id > 0 and batch_id % compact_every == 0:
                 import glob as _glob
                 import math as _math
@@ -364,6 +354,6 @@ def foreach_batch_quantile(
         sk = histogram_sketch(batch_df, value_col, group_cols, lo, hi, nbins)
         if store.exists(table):
             sk = merge_sketches(list(group_cols), store.read(table), sk)
-        store.rewrite(table, sk) if store.exists(table) else store.write(table, sk)
+        store.rewrite(table, sk)
 
     return _merge

@@ -494,8 +494,10 @@ def test_bucketed_mor_partition_scoped_compaction(spark, tmp_path):
     at 100 TB an amortized full-base rewrite is the dominant write cost;
     touched buckets track the delta key set, not the table). File-level
     assert: untouched bucket files keep their mtimes through compaction;
-    the merged view is bit-identical before and after."""
+    the merged view is bit-identical before and after, and the next delta
+    is numbered past the folded ones."""
     import glob
+    import json
     import os
 
     from job_etl_spark.pipeline.runner import TableStore
@@ -568,12 +570,15 @@ def test_bucketed_mor_partition_scoped_compaction(spark, tmp_path):
 
     after = {r["k"]: tuple(r) for r in store.read("t").collect()}
     assert after == before
+    # the base records its fold point, so delta numbering never restarts
+    with open(os.path.join(basedir, "_SCHEMA.json")) as f:
+        assert json.load(f)["folded"] == 3
 
     # a later delta + compact keeps working on the compacted layout
-    store.mor_upsert(
+    assert store.mor_upsert(
         "t", spark.createDataFrame([("5", None, "co-5", None)],
                                    "k string, ow string, co string, kf string")
-    )
+    ) == 4
     v1 = {r["k"]: tuple(r) for r in store.read("t").collect()}
     assert store.mor_compact("t") == 1
     assert {r["k"]: tuple(r) for r in store.read("t").collect()} == v1

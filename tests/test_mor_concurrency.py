@@ -7,9 +7,8 @@ ENFORCES the contract instead of assuming it: a second concurrent writer
 fails loudly (flock on ``_mor/_LOCK``), the stale-tmp sweep can never
 remove a LIVE writer's in-flight delta (pid-stamped tmp dirs, dead-owner
 check), and a base swap publishes data + schema atomically (the
-``_SCHEMA.json`` sidecar rides inside the renamed base dir, so a crash
-between the swap and the _META convenience update cannot make new
-columns silently vanish).
+``_SCHEMA.json`` sidecar rides inside the renamed base dir, the one home
+of the base's columns and schema).
 """
 
 from __future__ import annotations
@@ -110,50 +109,35 @@ def test_sweep_never_removes_live_writers_tmp(spark):
 def test_base_swap_publishes_schema_atomically(spark):
     """ADVICE r10: a schema-changing rewrite commits data + schema in the
     ONE base-swap rename (the ``_SCHEMA.json`` sidecar rides inside the
-    base dir). Even with the _META convenience copy forced stale — the
-    crash window between swap and meta update — the read sees the new
-    column instead of silently dropping it."""
+    base dir), so the read sees the new column instead of silently
+    dropping it."""
     store = _store(spark)
     _init_kv(spark, store)
-    stale_meta = store._mor_meta("t")
 
     widened = spark.createDataFrame(
         [(1, "a", 10.0), (2, "b", 20.0)], "k int, v string, w double"
     )
     store.rewrite("t", widened)
-    assert os.path.exists(store._mor_dir("t", "base", "_SCHEMA.json"))
-
-    # simulate the crash: restore the PRE-rewrite _META (old columns/schema)
-    with open(store._mor_dir("t", "_META"), "w") as f:
-        json.dump(stale_meta, f)
+    with open(store._mor_dir("t", "base", "_SCHEMA.json")) as f:
+        assert json.load(f)["columns"] == ["k", "v", "w"]
+    with open(store._mor_dir("t", "_META")) as f:
+        assert set(json.load(f)) == {"keys"}  # no second copy of the schema
 
     got = store.mor_read("t")
-    assert "w" in got.columns  # sidecar wins over the stale _META schema
+    assert "w" in got.columns
     assert {r["w"] for r in got.collect()} == {10.0, 20.0}
 
 
-def test_set_policy_upgrades_latest_wins_table(spark):
-    """``mor_set_policy`` folds the existing (latest-wins) delta stack
-    first, then records the policy for FUTURE statements only — so a
-    NULL in a coalesce-class column keeps the landed value afterwards,
-    while the historical deltas resolved under the semantics they were
-    written with."""
+def test_fact_mor_refuses_latest_wins_table(spark):
+    """A merge-on-read fact_jobs without ``fact_merge_policy`` would let a
+    marts delta's NULL rank columns replace landed scores wholesale: the
+    marts and rank stages refuse it instead of writing to it."""
+    from job_etl_spark.pipeline.runner import _ensure_fact_mor
+
     store = _store(spark)
-    _init_kv(spark, store, rows=((1, "a"), (2, "b")))
-    # latest-wins delta: nulls v for k=1 (legal pre-upgrade)
-    store.mor_upsert("t", spark.createDataFrame([(1, None)], "k int, v string"))
-    store.mor_set_policy("t", {"overwrite": [], "coalesce": ["v"], "keep_first": []})
-    assert store.mor_deltas("t") == []  # stack folded before the upgrade
-    assert store._mor_meta("t")["policy"]["coalesce"] == ["v"]
-    rows = {r["k"]: r["v"] for r in store.mor_read("t").collect()}
-    assert rows == {1: None, 2: "b"}  # the old delta kept latest-wins meaning
-
-    # post-upgrade: NULL in a coalesce column keeps the base value
-    store.mor_upsert("t", spark.createDataFrame([(2, None)], "k int, v string"))
-    rows = {r["k"]: r["v"] for r in store.mor_read("t").collect()}
-    assert rows == {1: None, 2: "b"}
-
-    # same policy again: no-op; different policy: refused
-    store.mor_set_policy("t", {"coalesce": ["v"]})
-    with pytest.raises(ValueError, match="different policy"):
-        store.mor_set_policy("t", {"overwrite": ["v"]})
+    fact = spark.createDataFrame([("h1", 1.5)], "hash_key string, rank_score double")
+    store.mor_init("fact_jobs", fact, ["hash_key"])
+    with pytest.raises(ValueError, match="fact_merge_policy"):
+        _ensure_fact_mor(store, None)
+    assert store.mor_deltas("fact_jobs") == []
+    assert store._mor_meta("fact_jobs") == {"keys": ["hash_key"]}

@@ -535,6 +535,7 @@ def test_enrich_writeback_via_mor(spark):
     O(pending): the base is NEVER rewritten by an enrich run."""
     import datetime as dt
     import glob
+    import json
     import os
 
     from job_etl_spark.pipeline.runner import run_enrich, run_extract, run_normalize
@@ -599,11 +600,13 @@ def test_enrich_writeback_via_mor(spark):
     assert set(d2.columns) == {
         "hash_key", "skills_raw", "seniority_level", "seniority_enrichment_status",
     }
-    assert os.path.exists(
-        os.path.join(
-            mor.path("staging_job_postings"), "_mor", "delta", "2", "_CLASSES.json"
-        )
-    )
+    # the statement's classes ride its schema sidecar
+    with open(
+        os.path.join(mor.path("staging_job_postings"), "_mor", "delta", "2", "_SCHEMA.json")
+    ) as f:
+        assert json.load(f)["classes"]["overwrite"] == [
+            "seniority_enrichment_status", "seniority_level", "skills_raw",
+        ]
 
     # plain re-run: nothing pending → no new delta, view unchanged, and
     # the base is still byte-untouched

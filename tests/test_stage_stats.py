@@ -6,8 +6,9 @@ frames they write, so the first group of tests pins every key and value on
 a fixed MockAdapter feed, for copy-on-write and merge-on-read. The values
 were recorded from the stages when each stat still ran its own count.
 
-The second group pins how many Spark jobs the copy-on-write stages launch,
-counted with the status tracker under a job group.
+The second group pins how many Spark jobs the copy-on-write stages and a
+steady-state merge-on-read marts run launch, counted with the status
+tracker under a job group.
 """
 
 from __future__ import annotations
@@ -34,6 +35,8 @@ T1 = dt.datetime(2026, 3, 1, 7)
 T2 = T1 + dt.timedelta(days=1)
 T3 = T1 + dt.timedelta(days=2)
 _MOR_TABLES = ("staging_job_postings", "dim_companies", "fact_jobs")
+# jobs of a steady-state merge-on-read marts run (test_mor_batch_job_budgets)
+MOR_MARTS_JOBS = 19
 
 
 def _posting(i: int, valid: bool = True, skills=("python",)) -> JobPostingRaw:
@@ -266,3 +269,25 @@ def test_cow_batch_job_budgets(spark, tmp_path):
     assert jobs["normalize"] <= 3, jobs
     assert jobs["rank"] <= 2, jobs
     assert sum(jobs.values()) <= 24, jobs
+
+
+def test_mor_batch_job_budgets(spark, tmp_path):
+    """A steady-state merge-on-read marts run, where no company is newer
+    than the dimension, lands no dimension delta: the one aggregate that
+    finds nothing new is all the dimension costs."""
+    store = TableStore(spark, str(tmp_path))
+    adapter = MockAdapter()
+    kw = {"mor": True, "compact_every": 2}
+    _land(store, MockAdapter(num_jobs=60).fetch_all() + [_posting(i) for i in range(4)], T1)
+    run_normalize(store, adapter, run_ts=T1, **kw)
+    run_enrich(store, run_ts=T1, **kw)
+    run_marts(store, run_ts=T1, **kw)
+    run_rank(store, mor=True)
+    # same companies, fresh postings: nothing new for the dimension
+    _land(store, [_posting(i) for i in range(30, 36)], T2)
+    run_normalize(store, adapter, min_collected_at=T2, run_ts=T2, **kw)
+    run_enrich(store, run_ts=T2, **kw)
+    stats, jobs = _jobs(spark, run_marts, store, run_ts=T2, **kw)
+    assert stats["dim_new"] == 0 and stats["fact_new"] == 6, stats
+    assert store.mor_deltas("dim_companies") == []
+    assert jobs <= MOR_MARTS_JOBS, jobs
