@@ -5,8 +5,8 @@ Scale design:
   (``transform``/``aggregate`` over token arrays) — whole-stage codegen,
   zero shuffle, zero Python. A 100 TB corpus signs in one map stage.
 - Candidate generation is the ONLY shuffle: explode b band ids per doc,
-  hash-partition on (band, bucket), self-join bucket-equal pairs. This is
-  the standard shingle→minhash→band→bucket-join LSH pipeline; no
+  group on (band, bucket), expand each bucket's pairs (``bucket_pairs``).
+  This is the standard shingle→minhash→band→bucket LSH pipeline; no
   all-pairs comparison ever happens.
 - All hashing is md5-derived (first 15 hex chars → 60-bit int): stable
   across engines (DuckDB oracle twin), runs, and partitionings — unlike
@@ -170,6 +170,58 @@ def minhash_bands(
     return lsh_bands(sig, id_col, "sig", bands, rows)
 
 
+def bucket_pairs(
+    rows: DataFrame,
+    bucket_cols: tuple[str, ...],
+    member: str | tuple[str, ...],
+    max_bucket: int | None = None,
+    hamming_sql: Callable[[str, str], str] | None = None,
+    max_hamming: int = 0,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """In-bucket pair expansion, the one pair path of every blocked
+    near-dup operator: group ``rows`` by ``bucket_cols``, collect each
+    bucket's sorted members, and explode every (i < j) pair as the struct
+    ``p`` = (doc_a, doc_b[, hamming]), doc_a < doc_b.
+
+    ``member`` is the id column, or a tuple of columns collected as a
+    struct whose first field is the id (so the sort orders by id).
+    Singleton buckets yield nothing. A bucket of B members yields B²/2
+    pairs, so ``max_bucket`` drops every bucket over the cap: the standard
+    LSH guard for adversarial skew (approximate recall, bounded worst
+    task); None keeps recall exact. ``hamming_sql(a, b)`` renders two
+    members' hamming distance from their SQL text; pairs over
+    ``max_hamming`` are filtered inside the array. ``keep`` names bucket
+    columns returned beside ``p``.
+
+    Rendered as one SQL string (``cached_expr``) rather than nested Python
+    lambdas: one parse per session instead of a few hundred py4j round
+    trips per build."""
+    if isinstance(member, str):
+        collected, field = F.col(member), ""
+    else:
+        collected, field = F.struct(*member), f".`{member[0]}`"
+    buckets = (
+        rows.groupBy(*bucket_cols)
+        .agg(F.array_sort(F.collect_list(collected)).alias("xs"))
+        .where(F.size("xs") >= 2)
+    )
+    if max_bucket is not None:
+        buckets = buckets.where(F.size("xs") <= max_bucket)
+    a, b = "element_at(xs, i)", "element_at(xs, j)"
+    pair = f"'doc_a', {a}{field}, 'doc_b', {b}{field}"
+    if hamming_sql is None:
+        per_i = f"transform(sequence(i + 1, size(xs)), j -> named_struct({pair}))"
+    else:
+        per_i = (
+            f"filter(transform(sequence(i + 1, size(xs)), j -> named_struct({pair}, "
+            f"'hamming', CAST({hamming_sql(a, b)} AS INT))), "
+            f"p -> p.hamming <= {int(max_hamming)})"
+        )
+    pairs = cached_expr(f"flatten(transform(sequence(1, size(xs) - 1), i -> {per_i}))")
+    return buckets.select(*keep, F.explode(pairs).alias("p"))
+
+
 def minhash_lsh_candidates(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -188,32 +240,11 @@ def minhash_lsh_candidates(
     (~2× the work — Spark does not reuse the un-materialized subtree),
     while the grouped form signs every doc exactly once and generates the
     identical pair multiset. Per-bucket memory is bounded by bucket size;
-    ``max_bucket`` optionally drops degenerate buckets (a bucket of B
-    docs yields B²/2 pairs under EITHER formulation — capping is the
-    standard LSH guard for adversarial skew at corpus scale)."""
+    ``max_bucket`` is ``bucket_pairs``' degenerate-bucket cap (a bucket
+    of B docs yields B²/2 pairs under EITHER formulation)."""
     banded = minhash_bands(docs, id_col, text_col, k, bands, rows, toks_col)
-    buckets = (
-        banded.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
-        .where(F.size("ids") >= 2)
-    )
-    if max_bucket is not None:
-        buckets = buckets.where(F.size("ids") <= max_bucket)
-    n = F.size("ids")
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.transform(
-                F.sequence(i + 1, n),
-                lambda j: F.struct(
-                    F.element_at(F.col("ids"), i).alias("doc_a"),
-                    F.element_at(F.col("ids"), j).alias("doc_b"),
-                ),
-            ),
-        )
-    )
     return (
-        buckets.select(F.explode(pairs).alias("p"))
+        bucket_pairs(banded, ("band", "bucket"), id_col, max_bucket)
         .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
     )
@@ -306,26 +337,6 @@ def with_simhash_wide(
     return out.drop("_toks", "_hs1", "_hs2")
 
 
-def _bucket_pairs_expr(
-    id_col: str, hamming_sql: Callable[[str, str], str], max_hamming: int
-) -> Column:
-    """In-bucket pair expansion over the sorted struct array ``xs``: every
-    (i < j) pair as (doc_a, doc_b, hamming), kept when hamming ≤
-    ``max_hamming``. ``hamming_sql(a, b)`` renders the pair's hamming
-    distance from the SQL text of its two structs. Rendered as one SQL
-    string (``cached_expr``) rather than nested Python lambdas: one parse
-    per session instead of a few hundred py4j round trips per build."""
-    a, b = "element_at(xs, i)", "element_at(xs, j)"
-    ham = hamming_sql(a, b)
-    return cached_expr(
-        "flatten(transform(sequence(1, size(xs) - 1), i -> filter("
-        "transform(sequence(i + 1, size(xs)), j -> named_struct("
-        f"'doc_a', {a}.`{id_col}`, 'doc_b', {b}.`{id_col}`, "
-        f"'hamming', CAST({ham} AS INT))), "
-        f"p -> p.hamming <= {int(max_hamming)})))"
-    )
-
-
 def simhash_wide_block_pairs(
     sigs: DataFrame,
     block_cols: tuple[str, ...] = ("lang", "source"),
@@ -375,21 +386,17 @@ def simhash_wide_block_pairs(
         F.col("_b.band").alias("_band"),
         F.col("_b.bval").alias("_bval"),
     )
-    buckets = (
-        exploded.groupBy(*block_cols, "_band", "_bval")
-        .agg(
-            F.array_sort(F.collect_list(F.struct(id_col, hi_col, lo_col))).alias("xs")
-        )
-        .where(F.size("xs") >= 2)
-    )
-    pairs = _bucket_pairs_expr(
-        id_col,
-        lambda a, b: f"bit_count({a}.`{hi_col}` ^ {b}.`{hi_col}`) "
-        f"+ bit_count({a}.`{lo_col}` ^ {b}.`{lo_col}`)",
-        max_hamming,
-    )
     return (
-        buckets.select(F.explode(pairs).alias("p"))
+        bucket_pairs(
+            exploded,
+            (*block_cols, "_band", "_bval"),
+            (id_col, hi_col, lo_col),
+            hamming_sql=lambda a, b: (
+                f"bit_count({a}.`{hi_col}` ^ {b}.`{hi_col}`) "
+                f"+ bit_count({a}.`{lo_col}` ^ {b}.`{lo_col}`)"
+            ),
+            max_hamming=max_hamming,
+        )
         .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .agg(F.min("p.hamming").alias("hamming"))
     )
@@ -417,9 +424,9 @@ def simhash_block_pairs(
     ``(max_hamming+1) · 2^band_width`` buckets instead of landing in ONE
     ``collect_list`` task with an O(n²) in-array expansion.
 
-    ``max_bucket`` optionally drops degenerate buckets (same guard as
-    ``minhash_lsh_candidates``): a near-dup-DENSE block still costs
-    Σ_buckets B² with B ≈ n_block / 2^band_width, so for adversarial
+    ``max_bucket`` is ``bucket_pairs``' degenerate-bucket cap: a
+    near-dup-DENSE block still costs Σ_buckets B² with
+    B ≈ n_block / 2^band_width, so for adversarial
     density at corpus scale either cap buckets (approximate recall,
     documented) or widen the signature (128-bit → ~14-bit bands). The
     oracle-paired queries leave it None (exact recall).
@@ -454,18 +461,15 @@ def simhash_block_pairs(
         sig_col,
         F.explode(F.sequence(F.lit(0), F.lit(nb - 1))).alias("_band"),
     ).withColumn("_bval", F.expr(bval_sql))
-    buckets = (
-        exploded.groupBy(*block_cols, "_band", "_bval")
-        .agg(F.array_sort(F.collect_list(F.struct(id_col, sig_col))).alias("xs"))
-        .where(F.size("xs") >= 2)
-    )
-    if max_bucket is not None:
-        buckets = buckets.where(F.size("xs") <= max_bucket)
-    pairs = _bucket_pairs_expr(
-        id_col, lambda a, b: f"bit_count({a}.`{sig_col}` ^ {b}.`{sig_col}`)", max_hamming
-    )
     return (
-        buckets.select(F.explode(pairs).alias("p"))
+        bucket_pairs(
+            exploded,
+            (*block_cols, "_band", "_bval"),
+            (id_col, sig_col),
+            max_bucket,
+            lambda a, b: f"bit_count({a}.`{sig_col}` ^ {b}.`{sig_col}`)",
+            max_hamming,
+        )
         # a pair agreeing on k bands is generated k times — dedup on the key
         .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .agg(F.min("p.hamming").alias("hamming"))

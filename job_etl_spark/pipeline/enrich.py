@@ -151,14 +151,15 @@ def skills_expr(
 # ---------------------------------------------------------------------------
 
 
-def needs_skills(staging: DataFrame, sources: list[str] | None = None) -> DataFrame:
-    """S6 scan: description present, skills missing/empty, optional source filter."""
-    cond = F.col("description").isNotNull() & (
-        F.col("skills_raw").isNull() | (F.size("skills_raw") == 0)
-    )
+def skills_pending(sources: list[str] | None = None, include_existing: bool = False) -> Column:
+    """S6 predicate: description present, skills missing/empty (unless
+    ``include_existing``), optional source filter."""
+    cond = F.col("description").isNotNull()
+    if not include_existing:
+        cond = cond & (F.col("skills_raw").isNull() | (F.size("skills_raw") == 0))
     if sources:
         cond = cond & F.col("source").isin(sources)
-    return staging.where(cond)
+    return cond
 
 
 def enrich_skills(
@@ -167,14 +168,12 @@ def enrich_skills(
 ) -> DataFrame:
     """Skills write-back (J6 collapsed into a column stage): rows selected by
     the S6 predicate get recomputed skills_raw; others pass through."""
-    cond = F.col("description").isNotNull()
-    if not include_existing:
-        cond = cond & (F.col("skills_raw").isNull() | (F.size("skills_raw") == 0))
-    if sources:
-        cond = cond & F.col("source").isin(sources)
     new_skills = skills_expr("description", "skills_raw", dictionary)
     return staging.withColumn(
-        "skills_raw", F.when(cond, new_skills).otherwise(F.col("skills_raw"))
+        "skills_raw",
+        F.when(skills_pending(sources, include_existing), new_skills).otherwise(
+            F.col("skills_raw")
+        ),
     )
 
 

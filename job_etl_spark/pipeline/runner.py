@@ -29,6 +29,7 @@ from job_etl_spark.pipeline.enrich import (
     enrich_seniority,
     enrich_skills,
     seed_company_records,
+    skills_pending,
 )
 from job_etl_spark.pipeline.marts import build_dim_companies, build_fact_jobs
 from job_etl_spark.pipeline.normalize import merge_into_staging, normalize_common
@@ -169,14 +170,7 @@ def run_enrich(
         # the pending subset: exactly the rows either enrichment phase
         # would touch (S6 skills predicate ∪ S7 seniority-pending). Its
         # stats ride the delta write, which runs the subset once.
-        skills_cond = F.col("description").isNotNull()
-        if not include_existing:
-            skills_cond = skills_cond & (
-                F.col("skills_raw").isNull() | (F.size("skills_raw") == 0)
-            )
-        if sources:
-            skills_cond = skills_cond & F.col("source").isin(sources)
-        pending = staging.where(skills_cond | not_tried).observe(
+        pending = staging.where(skills_pending(sources, include_existing) | not_tried).observe(
             pend,
             F.count_if(not_tried).alias("seniority_pending_before"),
             F.count(F.lit(1)).alias("enriched_rows"),

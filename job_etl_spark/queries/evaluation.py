@@ -45,6 +45,7 @@ QUERIES: dict[str, Query] = {}
 def q152_minhash_error(spark: SparkSession, sf: str) -> DataFrame:
     from job_etl_spark.ml.dedup import (
         MINHASH_K,
+        bucket_pairs,
         lsh_bands,
         minhash_signature_expr,
         shingle_hashes_expr,
@@ -74,26 +75,8 @@ def q152_minhash_error(spark: SparkSession, sf: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     banded = lsh_bands(sigs.select("doc_id", "sig"), "doc_id", "sig")
-    buckets = (
-        banded.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .where(F.size("ids") >= 2)
-    )
-    n = F.size("ids")
-    pair_arr = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.transform(
-                F.sequence(i + 1, n),
-                lambda j: F.struct(
-                    F.element_at(F.col("ids"), i).alias("doc_a"),
-                    F.element_at(F.col("ids"), j).alias("doc_b"),
-                ),
-            ),
-        )
-    )
     cand = (
-        buckets.select(F.explode(pair_arr).alias("p"))
+        bucket_pairs(banded, ("band", "bucket"), "doc_id")
         .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .distinct()
     )

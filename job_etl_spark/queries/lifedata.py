@@ -406,16 +406,15 @@ def q27_embedding_neardup(
     # (~10⁸ candidates at ~1% precision spilled past local disk), while
     # bands=16/planes=8/θ=0.9 — the production near-dup operating point,
     # re-tuned for that density — completes it comfortably (SCALING.md).
-    # ``max_bucket`` is the same degenerate-bucket guard as the simhash/
-    # minhash paths: drop buckets over the cap (approximate recall,
-    # bounded worst task) — for collision-driven skew, not dup-dense data.
+    # ``max_bucket`` is for collision-driven skew, not dup-dense data.
     from job_etl_spark.ml.ann import banded_bucket_expr
+    from job_etl_spark.ml.dedup import bucket_pairs
 
     emb = parallel_table(spark, sf, "embeddings").select(
         "vec_id", "label", F.transform("embedding", lambda x: x.cast("double")).alias("vec")
     )
     bands_expr = banded_bucket_expr(F.col("vec"), _q27_band_planes(bands, planes_per_band))
-    # The banded self-join shuffles each row once per band (8×). Carry only
+    # The banded grouping shuffles each row once per band (8×). Carry only
     # (vec_id, label) through it — shipping the 64-dim vector would multiply
     # shuffle bytes ~20×; the vectors are re-attached AFTER pair-dedup, when
     # each survives exactly once. At 100 TB this is the difference between
@@ -423,33 +422,11 @@ def q27_embedding_neardup(
     banded = emb.select(
         "vec_id", "label", F.explode(bands_expr).alias("bk")
     ).select("vec_id", "label", "bk.band_id", "bk.bucket")
-    # Grouped in-bucket pair expansion (ml/dedup's LSH-candidate shape):
-    # one groupBy shuffle of the id rows instead of a bucket-equality
-    # self-join that ships BOTH sides and re-evaluates the banding
-    # projection per side. Identical pair multiset.
-    buckets = (
-        banded.groupBy("label", "band_id", "bucket")
-        .agg(F.array_sort(F.collect_list("vec_id")).alias("ids"))
-        .where(F.size("ids") >= 2)
-    )
-    if max_bucket is not None:
-        buckets = buckets.where(F.size("ids") <= max_bucket)
-    n = F.size("ids")
-    pair_arr = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.transform(
-                F.sequence(i + 1, n),
-                lambda j: F.struct(
-                    F.element_at(F.col("ids"), i).alias("vec_a"),
-                    F.element_at(F.col("ids"), j).alias("vec_b"),
-                ),
-            ),
-        )
-    )
+    # label is in the block key: near-dup pairs never cross labels, so a
+    # bucket holds one label's rows of one band's 2^planes cell
     cand = (
-        buckets.select("label", F.explode(pair_arr).alias("p"))
-        .select(F.col("p.vec_a").alias("vec_a"), F.col("p.vec_b").alias("vec_b"), "label")
+        bucket_pairs(banded, ("label", "band_id", "bucket"), "vec_id", max_bucket, keep=("label",))
+        .select(F.col("p.doc_a").alias("vec_a"), F.col("p.doc_b").alias("vec_b"), "label")
         # a pair sharing several bands appears once per band — dedup on the
         # pair key before fetching vectors / the (expensive) exact cosine
         .dropDuplicates(["vec_a", "vec_b"])

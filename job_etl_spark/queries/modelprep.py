@@ -548,9 +548,9 @@ def q122_semantic_dedup(
     # (bands, planes_per_band, threshold) are the q27 density re-tune —
     # 2^planes must track in-cluster density or the in-bucket B² expansion
     # saturates (measured on the 64× dup-dense corpus; SCALING.md). The
-    # defaults are the declared oracle-paired setting; ``max_bucket`` is
-    # the same degenerate-bucket guard as the simhash/minhash paths.
+    # defaults are the declared oracle-paired setting.
     from job_etl_spark.ml.ann import assign_centroid, banded_bucket_expr
+    from job_etl_spark.ml.dedup import bucket_pairs
 
     emb = parallel_table(spark, sf, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("vec")
@@ -584,32 +584,11 @@ def q122_semantic_dedup(
     banded = assigned.select(
         "vec_id", "cid", F.explode(banded_bucket_expr(F.col("vec"), _q122_band_planes(bands, planes_per_band))).alias("bk")
     ).select("vec_id", "cid", F.col("bk.band_id").alias("band_id"), F.col("bk.bucket").alias("bucket"))
-    # Grouped in-bucket pair expansion (same shape as ml/dedup's LSH
-    # candidates): one pass over the band rows instead of a bucket-equality
-    # self-join that evaluates the banding subtree per side.
-    buckets = (
-        banded.groupBy("cid", "band_id", "bucket")
-        .agg(F.array_sort(F.collect_list("vec_id")).alias("ids"))
-        .where(F.size("ids") >= 2)
-    )
-    if max_bucket is not None:
-        buckets = buckets.where(F.size("ids") <= max_bucket)
-    n = F.size("ids")
-    pair_arr = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.transform(
-                F.sequence(i + 1, n),
-                lambda j: F.struct(
-                    F.element_at(F.col("ids"), i).alias("vec_a"),
-                    F.element_at(F.col("ids"), j).alias("vec_b"),
-                ),
-            ),
-        )
-    )
+    # cid is in the block key: duplicates are dropped per cluster, so a
+    # bucket holds one cluster's rows of one band's 2^planes cell
     cand = (
-        buckets.select("cid", F.explode(pair_arr).alias("p"))
-        .select(F.col("p.vec_a").alias("vec_a"), F.col("p.vec_b").alias("vec_b"), "cid")
+        bucket_pairs(banded, ("cid", "band_id", "bucket"), "vec_id", max_bucket, keep=("cid",))
+        .select(F.col("p.doc_a").alias("vec_a"), F.col("p.doc_b").alias("vec_b"), "cid")
         .dropDuplicates(["vec_a", "vec_b"])
     )
     va = assigned.select(

@@ -19,8 +19,13 @@ for between-round confidence sweeps:
      bucketed store layouts, compaction) == sequential COW merge chain
      (random policies, tombstones, revives, partial columns, empty
      batches)
+  9. per-statement fold (``merge_statements``) == pure-Python sequential
+     oracle
 
-Usage: python scripts/fuzz_parity.py [--examples 2000] [--seed 0]
+``--rounds`` sets the case count of families 3-6, 8 and 9 (Spark jobs
+per case); ``--examples`` that of families 1, 2 and 7.
+
+Usage: python scripts/fuzz_parity.py [--examples 2000] [--rounds 200] [--seed 0]
 Prints one PASS/FAIL line per invariant; exits non-zero on any FAIL.
 """
 
@@ -798,7 +803,7 @@ def fuzz_statement_oracle(spark, rng: random.Random, rounds: int) -> int:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--examples", type=int, default=2000)
-    ap.add_argument("--rounds", type=int, default=200, help="banding rounds (1 Spark job each)")
+    ap.add_argument("--rounds", type=int, default=200, help="cases per Spark-backed family (banding: 1 Spark job each)")
     ap.add_argument("--seed", type=int, default=0)
     args = ap.parse_args()
 
@@ -816,8 +821,8 @@ def main() -> None:
         ("pack_greedy==python greedy", fuzz_packing, args.rounds),
         ("attribution windows==python pair join", fuzz_attribution, args.rounds),
         ("seniority expr==spark-sql==duckdb", fuzz_seniority_render, args.examples),
-        ("mor fold==sequential COW", fuzz_mor_fold, max(args.rounds, 200)),
-        ("statement fold==python oracle", fuzz_statement_oracle, max(args.rounds, 200)),
+        ("mor fold==sequential COW", fuzz_mor_fold, args.rounds),
+        ("statement fold==python oracle", fuzz_statement_oracle, args.rounds),
     ):
         bad = fn(spark, rng, depth)
         print(f"{'FAIL' if bad else 'PASS'} {name} ({depth} cases, {bad} mismatches)", flush=True)

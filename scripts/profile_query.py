@@ -28,6 +28,7 @@ import json
 import os
 import sys
 import tempfile
+import threading
 import time
 from collections import defaultdict
 from pathlib import Path
@@ -101,15 +102,19 @@ def timed_build(fn, spark, sf: str):
     """(DataFrame, build seconds, py4j commands) of ``fn(spark, sf)``:
     the driver's share before any write — analysis, plan building, and
     any job the query runs while it builds. Commands are counted by
-    wrapping the py4j client's ``send_command`` for the call."""
+    wrapping the py4j client's ``send_command`` for the call, on the
+    calling thread only: py4j's finalizer thread wakes once a second to
+    send the deletes of earlier garbage, hundreds at a time."""
     from py4j.clientserver import ClientServerConnection
 
     send = ClientServerConnection.send_command
+    caller = threading.get_ident()
     n = 0
 
     def counting(self, command):
         nonlocal n
-        n += 1
+        if threading.get_ident() == caller:
+            n += 1
         return send(self, command)
 
     ClientServerConnection.send_command = counting

@@ -611,13 +611,26 @@ def test_small_graph_cc_is_one_collect(spark, monkeypatch):
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4}
 
 
+def _warm_build_py4j(spark, name):
+    """py4j commands of three warm builds of query ``name``."""
+    from scripts.profile_query import timed_build
+
+    fn = _REG[name].fn
+    fn(spark, SF_SMOKE)  # warm the parsed-expression memo
+    return [timed_build(fn, spark, SF_SMOKE)[2] for _ in range(3)]
+
+
 def test_q31_build_py4j_budget(spark):
     """The simhash fold and the in-bucket pair expansion are rendered SQL
     parsed once per session, not trees of Python lambdas: building q31
     costs a few hundred py4j commands (~900 when built from lambdas)."""
-    from scripts.profile_query import timed_build
-
-    fn = _REG["q31_simhash_neardup"].fn
-    fn(spark, SF_SMOKE)  # warm the parsed-expression memo
-    counts = [timed_build(fn, spark, SF_SMOKE)[2] for _ in range(3)]
+    counts = _warm_build_py4j(spark, "q31_simhash_neardup")
     assert min(counts) <= 300, f"building q31 took {counts} py4j commands"
+
+
+def test_q29_build_py4j_budget(spark):
+    """The minhash candidates' in-bucket pair expansion is one rendered SQL
+    string (``ml/dedup.bucket_pairs``), not nested Python lambdas: building
+    q29 costs ~430 py4j commands (~520 with the lambda expansion)."""
+    counts = _warm_build_py4j(spark, "q29_minhash_lsh")
+    assert min(counts) <= 475, f"building q29 took {counts} py4j commands"

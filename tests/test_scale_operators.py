@@ -396,9 +396,16 @@ def test_lsh_density_retune_is_sound(spark):
 
 
 def test_lsh_max_bucket_guard_drops_only_capped_buckets(spark):
-    """max_bucket on q27/q122 must (a) leave the default None path
-    byte-identical and (b) with a cap, emit a subset of the uncapped
-    pairs (dropping a bucket can only remove candidates)."""
+    """max_bucket on q27/q122 and the minhash/simhash candidate generators
+    must (a) leave the default None path byte-identical, (b) with a cap,
+    emit a subset of the uncapped pairs (dropping a bucket can only remove
+    candidates) and (c) with a cap at or above the largest bucket, emit
+    exactly the uncapped pairs."""
+    from job_etl_spark.ml.dedup import (
+        minhash_bands,
+        minhash_lsh_candidates,
+        simhash_block_pairs,
+    )
     from job_etl_spark.queries.lifedata import q27_embedding_neardup
     from job_etl_spark.queries.modelprep import q122_semantic_dedup
     from tests.conftest import SF_SMOKE
@@ -420,6 +427,48 @@ def test_lsh_max_bucket_guard_drops_only_capped_buckets(spark):
     }
     assert set(capped122) <= set(base122)
     assert all(capped122[c] <= base122[c] for c in capped122)
+
+    # minhash: four identical docs share every band bucket (B = 4)
+    fox = "the quick brown fox jumps over the lazy dog today"
+    docs = spark.createDataFrame(
+        [(i, fox) for i in range(1, 5)]
+        + [(5, "a b c d e f g h i j"), (6, "a b c d e f g h i k"),
+           (7, "completely different words go right here now")],
+        "doc_id long, text string",
+    )
+    largest = (
+        minhash_bands(docs).groupBy("band", "bucket").count().agg(F.max("count")).first()[0]
+    )
+    assert largest >= 4
+
+    def lsh(cap):
+        return {tuple(r) for r in minhash_lsh_candidates(docs, max_bucket=cap).collect()}
+
+    base = lsh(None)
+    below = lsh(largest - 1)
+    assert {r[:2] for r in below} < {r[:2] for r in base}
+    assert lsh(largest) == base
+    assert lsh(largest + 1) == base
+
+    # simhash: four equal signatures fill one bucket per band (B = 4); the
+    # complementary pair (hamming 1) shares no band with them
+    top = (1 << 60) - 1
+    sigs = spark.createDataFrame(
+        [(i, "b", 0) for i in range(1, 5)] + [(5, "b", top), (6, "b", top ^ 1)],
+        "doc_id long, blk string, simhash long",
+    )
+
+    def sim(cap):
+        return {
+            tuple(r)
+            for r in simhash_block_pairs(sigs, ("blk",), max_hamming=8, max_bucket=cap).collect()
+        }
+
+    base = sim(None)
+    assert base == {(a, b, 0) for a in range(1, 5) for b in range(a + 1, 5)} | {(5, 6, 1)}
+    assert sim(3) == {(5, 6, 1)}
+    assert sim(4) == base
+    assert sim(10) == base
 
 
 def test_connected_components_hybrid_paths_agree(spark):
