@@ -126,11 +126,11 @@ def normalize_common(common: DataFrame, run_ts) -> NormalizeResult:
 
     w = Window.partitionBy("hash_key").orderBy(F.desc("_ord"))
     wall = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    merged = normalized
-    for c in STAGING_COALESCE_COLS:
-        merged = merged.withColumn(c, F.first(c, ignorenulls=True).over(wall))
     merged = (
-        merged.withColumn("_rn", F.row_number().over(w))
+        normalized.withColumns(
+            {c: F.first(c, ignorenulls=True).over(wall) for c in STAGING_COALESCE_COLS}
+        )
+        .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn", "_ord")
     )

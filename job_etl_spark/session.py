@@ -81,6 +81,18 @@ def get_spark(app_name: str = "jobspark", shuffle_partitions: int | None = None)
         # 2-3x slower. 512m of reserved (virtual) space removes the cliff;
         # this is the standard setting for long-lived Spark drivers.
         .config("spark.driver.extraJavaOptions", _driver_java_opts())
+        # Generated-class cache (a static conf; Spark's default is 100
+        # entries). One copy-on-write ingest batch runs ~120 distinct
+        # whole-stage classes, so at 100 every steady-state batch evicted
+        # and recompiled 115-126 of them: 0.6-1.0 s of Janino in a 4-5 s
+        # batch (CodegenMetrics counts, 4-core host). At 200 or 1,000
+        # entries that batch compiles 23-30 classes, the ones whose source
+        # inlines the batch's new timestamp/long literals (run_ts, the
+        # watermarks), which no cache size keeps. A merge-on-read batch
+        # needs more: 610 compiles at 100 entries, 500 at 200, 127-140 at
+        # 1,000 and the same at 2,000. Driver Metaspace grew by about
+        # 7 MB against the default's.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         # PySpark records the Python call site of every Column/DataFrame
         # call by default, at several extra py4j round trips per call
@@ -91,3 +103,12 @@ def get_spark(app_name: str = "jobspark", shuffle_partitions: int | None = None)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """(classes Janino compiled, milliseconds it spent) in this session's
+    JVM so far — every whole-stage or expression class the generated-class
+    cache missed. Both are JVM-wide running totals: take differences."""
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    return compiled.getCount(), codegen.CodeGenerator.compileTime() / 1e6

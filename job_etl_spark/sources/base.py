@@ -18,6 +18,7 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from job_etl_spark.schema import RAW_SCHEMA
 
@@ -84,17 +85,30 @@ def land_raw(
     table). raw_id carries the fetch order as a fixed-width prefix —
     the within-batch last-row-wins dedup (the reference's row-at-a-time
     later-insert-wins) orders by raw_id, and a bare uuid4 would make the
-    winner among duplicate hash_keys a coin flip."""
-    rows = [
-        (
-            f"{seq:014d}-{j.raw_id.replace('-', '')[:16]}",
-            j.source,
-            json.dumps(j.payload, sort_keys=True),
-            collected_at,
-        )
-        for seq, j in enumerate(jobs)
-    ]
-    return spark.createDataFrame(rows, RAW_SCHEMA)
+    winner among duplicate hash_keys a coin flip.
+
+    The batch goes to Spark as one typed Arrow table, which plans as a
+    local relation instead of a scan over pickled rows. ``collected_at``
+    becomes epoch microseconds through ``TimestampType.toInternal``, the
+    conversion Spark applies to a Python datetime row (a naive value is
+    the host's local time), and travels tagged UTC, so the session time
+    zone cannot shift it."""
+    import pyarrow as pa
+
+    ts = TimestampType().toInternal(collected_at)
+    table = pa.table(
+        [
+            pa.array(
+                [f"{seq:014d}-{j.raw_id.replace('-', '')[:16]}" for seq, j in enumerate(jobs)],
+                pa.string(),
+            ),
+            pa.array([j.source for j in jobs], pa.string()),
+            pa.array([json.dumps(j.payload, sort_keys=True) for j in jobs], pa.string()),
+            pa.array([ts] * len(jobs), pa.timestamp("us", tz="UTC")),
+        ],
+        names=RAW_SCHEMA.names,
+    )
+    return spark.createDataFrame(table, RAW_SCHEMA)
 
 
 def common_from_raw(raw_df: DataFrame, adapter: SourceAdapter) -> DataFrame:

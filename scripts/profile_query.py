@@ -4,13 +4,16 @@ Runs each query to the noop sink in a ``get_spark`` session, after the
 q01 warm-up time_query.py uses, and tags every run with ``setJobGroup``.
 The build — the ``fn(spark, sf)`` call that returns the DataFrame, before
 the write — is timed on its own, and the py4j commands it sends to the
-JVM are counted: that is the driver-planning layer.
+JVM are counted: that is the driver-planning layer. The classes Janino
+compiles, and its time, are read for the build and for the write apart:
+that is the codegen layer, which a warm generated-class cache keeps at 0.
 The session's JVM starts with an uncompressed, non-rolling event log,
 switched on through a temporary SPARK_CONF_DIR as perfbench/run.py does.
 After the session stops, ``perfbench.trace`` parses that log. For each
 query's best (lowest-wall) run it prints:
 
 - the build time and its py4j command count;
+- the classes compiled and the compile time, in the build and in the run;
 - jobs, stages and tasks;
 - job time (the union of job intervals) and the driver gap (wall minus
   job time: planning, collects and scheduling that no job covers);
@@ -99,14 +102,18 @@ def operator_lines(plan: dict, totals: dict[int, float], depth: int = 0):
 
 
 def timed_build(fn, spark, sf: str):
-    """(DataFrame, build seconds, py4j commands) of ``fn(spark, sf)``:
-    the driver's share before any write — analysis, plan building, and
-    any job the query runs while it builds. Commands are counted by
+    """(DataFrame, build seconds, py4j commands, classes compiled, compile
+    ms) of ``fn(spark, sf)``: the driver's share before any write —
+    analysis, plan building, and any job the query runs while it builds
+    (a build that runs jobs compiles their classes). Commands are counted by
     wrapping the py4j client's ``send_command`` for the call, on the
     calling thread only: py4j's finalizer thread wakes once a second to
     send the deletes of earlier garbage, hundreds at a time."""
     from py4j.clientserver import ClientServerConnection
 
+    from job_etl_spark.session import codegen_compiles
+
+    compiles0, compile_ms0 = codegen_compiles(spark)
     send = ClientServerConnection.send_command
     caller = threading.get_ident()
     n = 0
@@ -124,7 +131,8 @@ def timed_build(fn, spark, sf: str):
         build_s = time.perf_counter() - t0
     finally:
         ClientServerConnection.send_command = send
-    return df, build_s, n
+    compiles, compile_ms = codegen_compiles(spark)
+    return df, build_s, n, compiles - compiles0, compile_ms - compile_ms0
 
 
 def enable_event_log(work: Path) -> None:
@@ -150,7 +158,7 @@ def main() -> None:
     from _resolve import resolve_query
 
     from job_etl_spark.queries import registry
-    from job_etl_spark.session import get_spark
+    from job_etl_spark.session import codegen_compiles, get_spark
     from perfbench import trace as tr
     from perfbench.run import stop_spark
 
@@ -162,7 +170,8 @@ def main() -> None:
         spark = get_spark("jobspark-profile")
         sc = spark.sparkContext
         windows: dict[str, tuple[float, float]] = {}
-        builds: dict[str, tuple[float, int]] = {}
+        builds: dict[str, tuple[float, int, int, float]] = {}
+        run_compiles: dict[str, tuple[int, float]] = {}
         try:
             reg["q01_pricing_summary"].fn(spark, args.sf).write.format("noop").mode("overwrite").save()
             for name in names:
@@ -170,10 +179,13 @@ def main() -> None:
                     group = f"{name}#{k}"
                     sc.setJobGroup(group, group)
                     t0 = time.time() * 1000.0
-                    df, build_s, calls = timed_build(reg[name].fn, spark, args.sf)
+                    df, *build = timed_build(reg[name].fn, spark, args.sf)
+                    builds[group] = tuple(build)
+                    compiles0, compile_ms0 = codegen_compiles(spark)
                     df.write.format("noop").mode("overwrite").save()
                     windows[group] = (t0, time.time() * 1000.0)
-                    builds[group] = (build_s, calls)
+                    compiles, compile_ms = codegen_compiles(spark)
+                    run_compiles[group] = (compiles - compiles0, compile_ms - compile_ms0)
         finally:
             stop_spark(spark)
         logs = sorted((work / "eventlog").iterdir())
@@ -191,8 +203,13 @@ def main() -> None:
         job_ms = tr.union_ms(tr.clip(gs.job_intervals, lo, hi))
         walls = ", ".join(f"{(windows[g][1] - windows[g][0]) / 1000:.3f}" for g in runs)
         print(f"\n=== {name}: best wall {(hi - lo) / 1000:.3f}s (runs {walls}) ===")
-        build_s, calls = builds[best]
-        print(f"  build {build_s:.3f}s, {calls} py4j commands")
+        build_s, calls, compiles, compile_ms = builds[best]
+        print(
+            f"  build {build_s:.3f}s, {calls} py4j commands, "
+            f"{compiles} classes compiled in {compile_ms:.0f} ms"
+        )
+        compiles, compile_ms = run_compiles[best]
+        print(f"  run {compiles} classes compiled in {compile_ms:.0f} ms")
         print(
             f"  {gs.jobs} jobs, {gs.stages} stages, {gs.tasks} tasks; job time "
             f"{job_ms / 1000:.3f}s, driver gap {(hi - lo - job_ms) / 1000:.3f}s"

@@ -1,11 +1,18 @@
 """Custom Python DataSource (S1 scale path): page ranges fan out across
-executors and produce exactly the rows the driver-side fetch loop does."""
+executors and produce exactly the rows the driver-side fetch loop does.
+The driver-side landing (``land_raw``, an Arrow table) is pinned here too:
+schema, collected_at instants and the fetch order its raw_ids carry."""
 
 from __future__ import annotations
 
 import datetime as dt
 import json
+import os
+import time
 
+from pyspark.sql import functions as F
+
+from job_etl_spark.schema import RAW_SCHEMA
 from job_etl_spark.sources.base import land_raw
 from job_etl_spark.sources.datasource import JobsRestDataSource
 from job_etl_spark.sources.mock_adapter import MockAdapter
@@ -54,6 +61,55 @@ def test_datasource_matches_driver_fetch_loop(spark):
     assert sorted(r["raw_id"] for r in again.collect()) == sorted(
         r["raw_id"] for r in df.collect()
     )
+
+
+def test_land_raw_empty_batch(spark):
+    empty = land_raw(spark, [], dt.datetime(2026, 1, 1, 7))
+    assert empty.schema == RAW_SCHEMA
+    assert empty.count() == 0
+
+
+def _landed_micros(spark, collected_at) -> int:
+    jobs = MockAdapter(num_jobs=3).fetch_all()
+    got = land_raw(spark, jobs, collected_at).select(F.unix_micros("collected_at")).collect()
+    assert len({r[0] for r in got}) == 1
+    return got[0][0]
+
+
+def test_land_raw_collected_at_instants(spark):
+    """collected_at lands as the instant a row-based createDataFrame gave
+    it (the values below were recorded from that path): a naive value is
+    the host's local time, an aware one its own instant, and the session
+    time zone (UTC) plays no part. The naive case runs with the process
+    time zone at Asia/Kolkata (UTC+5:30) so its value pins local-time
+    reading on any host."""
+    wall = dt.datetime(2026, 1, 1, 7, 0, 0, 123456)
+    aware = wall.replace(tzinfo=dt.timezone(dt.timedelta(hours=-8)))
+    assert _landed_micros(spark, aware) == 1767279600123456  # 15:00:00.123456Z
+    host_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Kolkata"
+    time.tzset()
+    try:
+        assert _landed_micros(spark, wall) == 1767231000123456  # 01:30:00.123456Z
+    finally:
+        if host_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = host_tz
+        time.tzset()
+
+
+def test_land_raw_ids_carry_fetch_order(spark):
+    """raw_id is the fetch position (14 digits) then the first 16 hex
+    digits of the record's uuid, so sorting raw_ids is fetch order."""
+    jobs = MockAdapter(num_jobs=12, jobs_per_page=5).fetch_all()
+    rows = land_raw(spark, jobs, dt.datetime(2026, 1, 1, 7)).collect()
+    assert [r["raw_id"] for r in rows] == [
+        f"{i:014d}-{j.raw_id.replace('-', '')[:16]}" for i, j in enumerate(jobs)
+    ]
+    assert [json.loads(r["payload"]) for r in sorted(rows, key=lambda r: r["raw_id"])] == [
+        j.payload for j in jobs
+    ]
 
 
 def test_chunk_udtf_matches_native(spark):

@@ -634,3 +634,21 @@ def test_q29_build_py4j_budget(spark):
     q29 costs ~430 py4j commands (~520 with the lambda expansion)."""
     counts = _warm_build_py4j(spark, "q29_minhash_lsh")
     assert min(counts) <= 475, f"building q29 took {counts} py4j commands"
+
+
+def test_q58_rerun_compiles_nothing(spark):
+    """Whole-stage classes stay compiled across the query rotation: after
+    warm runs of q58 and q104, running q58 again compiles no class (a
+    generated-class cache smaller than the session's working set evicts
+    and recompiles them on every run)."""
+    from job_etl_spark.session import codegen_compiles
+
+    def run(name):
+        _REG[name].fn(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+
+    run("q58_dedup_clusters")
+    run("q104_topk_bounds")
+    before, _ = codegen_compiles(spark)
+    run("q58_dedup_clusters")
+    compiled = codegen_compiles(spark)[0] - before
+    assert compiled == 0, f"re-running q58 compiled {compiled} classes"

@@ -104,14 +104,29 @@ def test_profile_query_reads_operator_metrics_from_event_log():
 
 def test_profile_query_times_the_build(spark):
     """The build layer: fn(spark, sf) timed apart from the write, with the
-    py4j commands it sent, and the client's send_command restored after."""
+    py4j commands it sent, and the client's send_command restored after.
+    The codegen layer: a build that runs a job compiles its classes the
+    first time, and a rebuild finds them all in the generated-class cache."""
     from py4j.clientserver import ClientServerConnection
 
     from job_etl_spark.queries import registry
     from scripts.profile_query import timed_build
 
     send = ClientServerConnection.send_command
-    df, build_s, calls = timed_build(registry()["q01_pricing_summary"].fn, spark, SF_SMOKE)
+    df, build_s, calls, compiles, compile_ms = timed_build(
+        registry()["q01_pricing_summary"].fn, spark, SF_SMOKE
+    )
     assert ClientServerConnection.send_command is send
     assert build_s > 0 and calls > 0
+    assert compiles >= 0 and compile_ms >= 0
     assert df.columns  # a DataFrame, not yet written
+
+    def counted(spark, sf):
+        return spark.createDataFrame([(i,) for i in range(3)], "n long").selectExpr(
+            "n * 3 + 1 AS m"
+        ).where("m > 2").count()
+
+    _, _, _, first, first_ms = timed_build(counted, spark, SF_SMOKE)
+    _, _, _, again, again_ms = timed_build(counted, spark, SF_SMOKE)
+    assert first >= 1 and first_ms > 0
+    assert again == 0 and again_ms == 0

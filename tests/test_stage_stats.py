@@ -8,7 +8,8 @@ were recorded from the stages when each stat still ran its own count.
 
 The second group pins how many Spark jobs the copy-on-write stages and a
 steady-state merge-on-read marts run launch, counted with the status
-tracker under a job group.
+tracker under a job group, and how many classes the copy-on-write batch
+compiles, read off Janino's counter.
 """
 
 from __future__ import annotations
@@ -28,6 +29,7 @@ from job_etl_spark.pipeline.runner import (
     run_normalize,
     run_rank,
 )
+from job_etl_spark.session import codegen_compiles
 from job_etl_spark.sources.base import JobPostingRaw, land_raw
 from job_etl_spark.sources.mock_adapter import MockAdapter
 
@@ -245,7 +247,10 @@ def test_cow_table_reads_without_a_job(spark, tmp_path):
 def test_cow_batch_job_budgets(spark, tmp_path):
     """One Spark action per table a stage writes: a copy-on-write batch
     over existing tables runs normalize in ≤ 3 jobs, rank in ≤ 2, and the
-    whole batch (land through digest) in ≤ 24."""
+    whole batch (land through digest) in ≤ 24. It compiles at most 85
+    classes: 17 after the rest of this file has run, 71 alone, against
+    105-106 with Spark's 100-entry generated-class cache, which the batch's
+    working set overflows."""
     from job_etl_spark.pipeline.report import daily_digest
 
     store = TableStore(spark, str(tmp_path))
@@ -256,6 +261,7 @@ def test_cow_batch_job_budgets(spark, tmp_path):
     run_marts(store, run_ts=T1)
     run_rank(store)
     jobs = {}
+    compiles0, _ = codegen_compiles(spark)
     batch = MockAdapter(num_jobs=30).fetch_all() + [_posting(i) for i in range(6)]
     _, jobs["land"] = _jobs(spark, _land, store, batch + [_posting(99, False)], T2)
     stats, jobs["normalize"] = _jobs(
@@ -265,7 +271,9 @@ def test_cow_batch_job_budgets(spark, tmp_path):
     _, jobs["marts"] = _jobs(spark, run_marts, store, run_ts=T2)
     _, jobs["rank"] = _jobs(spark, run_rank, store)
     _, jobs["digest"] = _jobs(spark, lambda: daily_digest(store.read("fact_jobs")))
+    compiles = codegen_compiles(spark)[0] - compiles0
     assert stats["rejected"] == 1 and stats["normalized"] == 36
+    assert compiles <= 85, compiles
     assert jobs["normalize"] <= 3, jobs
     assert jobs["rank"] <= 2, jobs
     assert sum(jobs.values()) <= 24, jobs
